@@ -566,12 +566,7 @@ def main() -> None:
     # streaming micro-bench (VERDICT r15 #8, additive): AFTER the headline
     # loop so it cannot perturb the timed medians. Errors are reported in
     # their own field — they must never null the headline value.
-    stream_sec: float | None = None
-    stream_err: str | None = None
-    try:
-        stream_sec = _stream_ingest_bench(spark, sf_dir)
-    except Exception as exc:  # noqa: BLE001 — additive metric, isolate
-        stream_err = f"{type(exc).__name__}: {str(exc).splitlines()[0][:200]}"
+    stream_sec, stream_err = _stream_ingest_metric(spark, sf_dir)
 
     # Per-query spread over the warm samples (VERDICT r10 #4): the r10
     # artifact drifted +10% with no code cause and single-shot numbers
@@ -650,6 +645,20 @@ def main() -> None:
     spark.stop()
 
 
+#: wall-clock limit of one stream micro-bench rep; a rep that exceeds it
+#: is stopped and reported as ``stream_ingest_error``
+STREAM_TIMEOUT_S = 300
+
+
+def _stream_ingest_metric(spark, sf_dir: str) -> tuple[float | None, str | None]:
+    """``(stream_ingest_sec, stream_ingest_error)``: exactly one is set.
+    Any failure, a timeout included, becomes the error string."""
+    try:
+        return _stream_ingest_bench(spark, sf_dir), None
+    except Exception as exc:  # noqa: BLE001 — additive metric, isolate
+        return None, f"{type(exc).__name__}: {str(exc).splitlines()[0][:200]}"
+
+
 def _stream_ingest_bench(spark, sf_dir: str, reps: int = 3) -> float:
     """Timed availableNow micro-batch run of ``stream_ingest_dedup`` over
     two fixture-derived document slices (VERDICT r15 #8): 200 docs from
@@ -702,7 +711,14 @@ def _stream_ingest_bench(spark, sf_dir: str, reps: int = 3) -> float:
             q = stream_ingest_dedup(
                 stream, state, f"{rep_dir}/ckpt", DedupIngestConfig()
             )
-            q.awaitTermination(300)
+            if not q.awaitTermination(STREAM_TIMEOUT_S):
+                # a still-running query must not count as a sample, nor
+                # have its directories removed from under it
+                q.stop()
+                raise TimeoutError(
+                    f"stream_ingest_dedup rep {rep} still running after "
+                    f"{STREAM_TIMEOUT_S} s; stopped"
+                )
             times.append(time.perf_counter() - t0)
             gc.collect()
         return round(statistics.median(times), 4)

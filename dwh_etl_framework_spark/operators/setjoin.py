@@ -41,13 +41,11 @@ exact-AND-scalable middle. The reference has no prefix-filter tier.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
-from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dwh_etl_framework_spark.operators.dedup import shingle_table
+from dwh_etl_framework_spark.session import run_concurrently
 
 
 #: Verify-stage cost budget: digest comparisons per task. Each candidate
@@ -231,24 +229,12 @@ def prefix_filter_jaccard_pairs(
     # sequential because driver code calls them sequentially). Measured
     # at sf0.1: the pref+sets phase drops ~0.3 s of pure tail idle;
     # composed pipelines (x97) overlap their signature tier on top of
-    # this the same way. Job submission is thread-safe; FIFO scheduling
-    # gives exactly the back-fill behaviour wanted.
-    # ``inheritable_thread_target`` (ADVICE r15): in pinned-thread mode a
-    # bare pool thread maps to a fresh JVM thread that inherits NO job-
-    # group/description local properties (setJobDescription labels are
-    # lost; cancelJobGroup cannot reach these jobs) and lingers until GC
-    # under repeated calls — the wrapper copies the parent's properties
-    # onto the worker thread and detaches it when done.
-    _inherit = inheritable_thread_target(sh.sparkSession)
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fpref = _pool.submit(_inherit(
-            lambda: pref_lazy.localCheckpoint(eager=True)
-        ))
-        _fsets = _pool.submit(_inherit(
-            lambda: sets_lazy.localCheckpoint(eager=True)
-        ))
-        pref = _fpref.result()
-        sets = _fsets.result()
+    # this the same way.
+    pref, sets = run_concurrently(
+        sh.sparkSession,
+        lambda: pref_lazy.localCheckpoint(eager=True),
+        lambda: sets_lazy.localCheckpoint(eager=True),
+    )
 
     # Candidate generation: SHORT-prefix rows of the (n, id)-smaller doc
     # against full-prefix rows of the larger (the indexing-prefix note

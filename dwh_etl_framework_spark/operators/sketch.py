@@ -181,13 +181,21 @@ def hll_registers(
 
     STATE, ≤ m rows per group. MAX-mergeable: registers built on any
     partition of the data (days, tables, clusters) combine with another
-    MAX over (group, bucket) — see :func:`hll_merge`. Spark's partial
-    aggregation does exactly that map-side, so the raw values never
-    shuffle; only (group, bucket) register rows do."""
-    from dwh_etl_framework_spark.operators.dedup import _spread
+    MAX over (group, bucket) — see :func:`hll_merge`.
 
-    frags = hll_frags(SPARK_HEX, value_expr)
-    hashed = _spread(df).selectExpr(*group_cols, f"{frags['h']} AS __h")
+    Cost model (count-first): the input is first reduced to its distinct
+    (group..., value) pairs, and only those are hashed. MAX is
+    idempotent, so the registers are bit-identical to hashing every row,
+    and a skewed key hashes each value once instead of once per row. The
+    value is deduplicated by its string form — exactly what the hash
+    reads — so float -0.0/NaN normalisation cannot merge two values that
+    hash apart. Trade-off: on a unique key the distinct step dedups
+    nothing and adds one exchange of the raw values."""
+    frags = hll_frags(SPARK_HEX, "__v")
+    distinct = df.selectExpr(
+        *group_cols, f"CAST({value_expr} AS STRING) AS __v"
+    ).distinct()
+    hashed = distinct.selectExpr(*group_cols, f"{frags['h']} AS __h")
     sliced = hashed.selectExpr(
         *group_cols,
         f"{frags['bucket'].format(div='DIV')} AS bucket",
@@ -269,22 +277,28 @@ def cms_col_expr(hex_at: str, value_expr: str, w: int = CMS_W) -> str:
 
 
 def cms_sketch(df: DataFrame, value_expr: str, w: int = CMS_W) -> DataFrame:
-    """Build the (r, col, cnt) counter table — ≤ d·w rows total, via one
+    """Build the (r, col, cnt) counter table — ≤ d·w rows total. Two
+    sketches merge by summing counters.
 
-    partial+final aggregate over the d-exploded input. Raw values never
-    shuffle: the map side reduces each partition to ≤ d·w counter rows
-    before the exchange, and two sketches merge by summing counters."""
-    from dwh_etl_framework_spark.operators.dedup import _spread
-
-    # md5 hoisted ABOVE the d-explode (round 15): the hash depends only
-    # on the value, so computing it in the pre-explode projection runs
-    # it once per input row instead of once per (row, r) — d× fewer
-    # hashes, identical counters (the per-r column index still reads
-    # its own disjoint hex window of the same digest).
+    Cost model (count-first): the input is first reduced to one row per
+    distinct value with its row count; only those rows are hashed and
+    d-exploded, and each cell SUMs the counts of the values that address
+    it. That is bit-identical to counting every row (a cell's count is
+    the sum over its values of their multiplicities), but a key with u
+    distinct values over n rows costs u hashes instead of n. The value
+    is grouped by its string form — exactly what the hash reads — so
+    float -0.0/NaN normalisation cannot merge two values that hash
+    apart; NULL values form one group, as they form one (NULL) cell.
+    Trade-off: on a unique key (u = n) the count step reduces nothing
+    and adds one exchange of the raw values."""
+    counted = df.groupBy(
+        F.expr(f"CAST({value_expr} AS STRING)").alias("__v")
+    ).agg(F.count(F.lit(1)).alias("__n"))
+    # md5 hoisted ABOVE the d-explode (round 15): the per-r column index
+    # reads its own disjoint hex window of the one digest
     rows = (
-        _spread(df)
-        .selectExpr(f"md5('cms:' || CAST({value_expr} AS STRING)) AS __h")
-        .selectExpr(f"explode(sequence(0, {CMS_D - 1})) AS r", "__h")
+        counted.selectExpr("md5('cms:' || __v) AS __h", "__n")
+        .selectExpr(f"explode(sequence(0, {CMS_D - 1})) AS r", "__h", "__n")
         .selectExpr(
             "r",
             "CAST("
@@ -292,11 +306,10 @@ def cms_sketch(df: DataFrame, value_expr: str, w: int = CMS_W) -> DataFrame:
                 expr="__h", start="CAST(1 + r * 8 AS INT)", n=8
             )
             + f" % {w} AS BIGINT) AS col",
+            "__n",
         )
     )
-    return rows.groupBy("r", "col").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
+    return rows.groupBy("r", "col").agg(F.sum("__n").cast("long").alias("cnt"))
 
 
 def cms_estimate(

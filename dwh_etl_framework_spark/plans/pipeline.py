@@ -11,6 +11,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 from dwh_etl_framework_spark.operators.merge import (
     JournalSpec,
@@ -163,14 +164,25 @@ class Pipeline:
         transform_dt=None,
     ) -> DataFrame | None:
         """Full lifecycle, mirroring EP2 of the reference (SURVEY.md §3)."""
+        master = self.build_master(read_mode, write_mode, merge_mode, transform_dt)
+        if master is not None and getattr(self.table, "landing", None):
+            self.land_master(master)
+        return master
+
+    def build_master(
+        self,
+        read_mode: str = "full",
+        write_mode: str = "append",
+        merge_mode: str = "full",
+        transform_dt=None,
+    ) -> DataFrame | None:
+        """Every stage of :meth:`run` but the landing: sources, migration,
+        transform, journal write and merge. Returns the (lazy) master."""
         self.register_dependencies()
         self.run_migration()
         result = self.transform(read_mode)
         self.write_journal(result, transform_dt, write_mode)
-        master = self.merge(merge_mode)
-        if master is not None and getattr(self.table, "landing", None):
-            self.land_master(master)
-        return master
+        return self.merge(merge_mode)
 
     def land_master(self, master: DataFrame) -> None:
         """F17 from config: land the merged master at the declared
@@ -245,23 +257,51 @@ def run_pipeline_config(
     underscores), so later tables can depend on earlier ones' outputs —
     the multi-table DWH layering (staging → marts) the reference's
     config.yaml encodes.
+
+    Master reuse: a master that a LATER table names in ``depends_on`` is
+    persisted (MEMORY_AND_DISK) before its landing, so the landing
+    materializes it once and the dependents' sketch-driven join planning
+    and SQL read the cached rows instead of re-running the upstream
+    merge. Nothing else decides it — a table that reads an upstream view
+    without declaring ``depends_on`` recomputes it, as before. The run
+    releases every cache it created for reuse when it returns (or
+    raises); the returned pipelines' masters stay valid, lazily.
     """
+    # targets that a LATER table names in depends_on
+    needed: set[str] = set()
+    consumed: set[str] = set()
+    for table in reversed(config.tables):
+        if table.target in needed:
+            consumed.add(table.target)
+        needed.update(table.depends_on)
+    kept: list[DataFrame] = []
     pipelines: dict[str, Pipeline] = {}
-    for table in config.tables:
-        pipe = Pipeline(
-            spark=spark,
-            table=table,
-            variable_resolver=variable_resolver,
-            sql_base_dir=sql_base_dir,
-            connections=dict(connections or {}),
-        )
-        master = pipe.run(
-            read_mode=read_mode,
-            write_mode=write_mode,
-            merge_mode=merge_mode,
-            transform_dt=transform_dt,
-        )
-        if master is not None:
-            master.createOrReplaceTempView(table.target.replace(".", "_"))
-        pipelines[table.target] = pipe
+    try:
+        for table in config.tables:
+            pipe = Pipeline(
+                spark=spark,
+                table=table,
+                variable_resolver=variable_resolver,
+                sql_base_dir=sql_base_dir,
+                connections=dict(connections or {}),
+            )
+            master = pipe.build_master(
+                read_mode=read_mode,
+                write_mode=write_mode,
+                merge_mode=merge_mode,
+                transform_dt=transform_dt,
+            )
+            if master is not None:
+                if table.target in consumed:
+                    pipe.master = master = master.persist(
+                        StorageLevel.MEMORY_AND_DISK
+                    )
+                    kept.append(master)
+                if getattr(table, "landing", None):
+                    pipe.land_master(master)
+                master.createOrReplaceTempView(table.target.replace(".", "_"))
+            pipelines[table.target] = pipe
+    finally:
+        for master in kept:
+            master.unpersist()
     return pipelines

@@ -83,12 +83,14 @@ def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
     Returns ``(decision, restore)`` where ``restore()`` undoes the view
     re-registration.
 
-    Sketch source: by default each side is sketched inline (one scan);
-    ``left_state``/``right_state`` point at CMS fold state directories
-    (``streaming/distinct.fold_cms_batch``) to serve the sketch from
-    continuously maintained state instead — the metadata-only planning
-    story for incremental runs (decision equality batch≡stream is pinned
-    by ``tests/test_join_strategy.py``)."""
+    Sketch source: by default each side is sketched inline (one scan of
+    the view; when the view is an upstream master that
+    ``run_pipeline_config`` keeps for this table's ``depends_on``, the
+    scan reads the cached rows); ``left_state``/``right_state`` point at
+    CMS fold state directories (``streaming/distinct.fold_cms_batch``)
+    to serve the sketch from continuously maintained state instead —
+    the metadata-only planning story for incremental runs (decision
+    equality batch≡stream is pinned by ``tests/test_join_strategy.py``)."""
     from pyspark.sql import functions as F
 
     from dwh_etl_framework_spark.operators.sketch import (

@@ -106,11 +106,12 @@ def x84_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact (Spark's builtin HLL++ is r17b, rows-only — its xxhash is
     not reproducible outside the JVM).
 
-    Scale shape: this is THE count-distinct that survives 100 TB — user
-    ids never shuffle. The map side reduces each partition to ≤ m
-    register rows per group (partial MAX combine), the exchange carries
-    (group, bucket) pairs only, and register tables from different days /
-    tables / clusters merge with another MAX. The exact COUNT(DISTINCT)
+    Scale shape: the register build first reduces events to their
+    distinct (group, user id) pairs, so each id is hashed once however
+    many events it has; the map side then reduces each partition to ≤ m
+    register rows per group (partial MAX combine) before the register
+    exchange, and register tables from different days / tables /
+    clusters merge with another MAX. The exact COUNT(DISTINCT)
     beside it is the audit column (itself a full shuffle — at production
     scale you'd sample-audit instead); the integer harmonic sum
     Σ 2^(RMAX−reg) makes the estimate bit-reproducible everywhere."""

@@ -74,12 +74,13 @@ def x86_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     overcount. All-integer ⇒ the oracle reproduces every counter and
     every min bit-for-bit.
 
-    Scale shape: the sketch build is one partial+final aggregate whose
-    map side reduces each partition to ≤ d·w counter rows — user ids
-    never shuffle for the sketch; the probe broadcasts the ≤ d·w-row
-    sketch and is map-only over the key table; the exact COUNT beside it
-    is the audit (sampled at production scale). Two sketches merge by
-    SUMMING counters — per-day sketches compose without raw data."""
+    Scale shape: the sketch build counts events per distinct user id,
+    hashes each id once, and sums the counts into ≤ d·w counter rows
+    (map-side partial sums before the counter exchange); the probe
+    broadcasts the ≤ d·w-row sketch and is map-only over the key table;
+    the exact COUNT beside it is the audit (sampled at production
+    scale). Two sketches merge by SUMMING counters — per-day sketches
+    compose without raw data."""
     t = fixtures(spark, sf_dir)
     sk = cms_sketch(t.events, "user_id")
     # the exact audit table doubles as the probe key set (scan-audit fix:

@@ -21,14 +21,12 @@ ANSI SQL, so the driver hash-checks discovery AND proof in one row set
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dwh_etl_framework_spark.operators import dedup, sampling, setjoin
 from dwh_etl_framework_spark.queries.registry import fixtures, query
+from dwh_etl_framework_spark.session import run_concurrently
 
 #: exact half = the naive self-join (x02/x94 oracle, shared ``sh``
 #: MATERIALIZED — DuckDB re-inlines plain CTEs, r7 lesson); LSH half =
@@ -138,15 +136,7 @@ def x97_cascade_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_bucket_size=None,
         ).select("doc_a", "doc_b", F.lit(True).alias("__hit"))
 
-    # inheritable_thread_target (ADVICE r15): tier threads inherit the
-    # parent's job-group/description local properties and detach their
-    # JVM thread when done (bare pool threads would linger until GC and
-    # lose setJobDescription labels in pinned-thread mode)
-    _inherit = inheritable_thread_target(spark)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exact = pool.submit(_inherit(_exact_tier))
-        f_lsh = pool.submit(_inherit(_lsh_tier))
-        exact, recalled = f_exact.result(), f_lsh.result()
+    exact, recalled = run_concurrently(spark, _exact_tier, _lsh_tier)
     return (
         exact.join(recalled, ["doc_a", "doc_b"], "left")
         .select(
@@ -239,12 +229,7 @@ def x97s_cascade_audit_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             est_threshold=0.5, max_bucket_size=None,
         ).select("doc_a", "doc_b", F.lit(True).alias("__hit"))
 
-    # same inheritable_thread_target rationale as x97 (ADVICE r15)
-    _inherit = inheritable_thread_target(spark)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exact = pool.submit(_inherit(_exact_tier))
-        f_lsh = pool.submit(_inherit(_lsh_tier))
-        exact, recalled = f_exact.result(), f_lsh.result()
+    exact, recalled = run_concurrently(spark, _exact_tier, _lsh_tier)
     return (
         exact.join(recalled, ["doc_a", "doc_b"], "left")
         .select(

@@ -22,7 +22,7 @@ import tempfile
 import zipfile
 from contextlib import contextmanager
 from pathlib import Path
-from typing import Iterator
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import SparkSession
 
@@ -220,3 +220,29 @@ def get_session(**kwargs) -> Iterator[SparkSession]:
         yield spark
     finally:
         spark.stop()
+
+
+def run_concurrently(spark: SparkSession, *thunks: Callable[[], Any]) -> list:
+    """Run independent driver-side thunks (each typically one Spark
+    action) in one thread each, and return their results in order.
+
+    Job submission is thread-safe, and FIFO scheduling lets a later
+    job's tasks back-fill cores freed by an earlier job's tail. In
+    pinned-thread mode (the default) each Python thread gets its own JVM
+    thread, so the thunks are wrapped with
+    ``pyspark.inheritable_thread_target``: the thread inherits the
+    caller's local properties (job group, description, tags), so labels
+    and ``cancelJobGroup`` reach its jobs, and detaches its JVM thread
+    when done. With ``PYSPARK_PIN_THREAD=false`` that function returns
+    the session itself instead of a wrapper, and there is no per-thread
+    JVM state to copy, so the thunks run unwrapped."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    if isinstance(wrap, SparkSession):
+        wrap = lambda fn: fn  # noqa: E731 — non-pinned thread mode
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(wrap(t)) for t in thunks]
+        return [f.result() for f in futures]

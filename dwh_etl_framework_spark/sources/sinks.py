@@ -103,6 +103,19 @@ def _refuse_if_pending(spark, path: str) -> None:
         )
 
 
+def _persist_unless_cached(df: DataFrame) -> bool:
+    """Persist ``df`` (MEMORY_AND_DISK) unless it is already cached.
+    Returns True when this call created the cache, so the caller owns
+    its release. A cache created elsewhere — a master a pipeline run
+    keeps for its dependents — is used as is and left to its owner."""
+    from pyspark.storagelevel import StorageLevel
+
+    if df.storageLevel != StorageLevel.NONE:
+        return False
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    return True
+
+
 def write_table_with_sketches(
     df: DataFrame,
     path: str,
@@ -144,8 +157,6 @@ def write_table_with_sketches(
 
     from pyspark.sql import functions as F
 
-    from pyspark.storagelevel import StorageLevel
-
     from dwh_etl_framework_spark.operators.sketch import (
         CMS_W,
         cms_sketch,
@@ -161,7 +172,7 @@ def write_table_with_sketches(
     # lineage (2 extra passes per key — a landed master's whole merge
     # plan, multiplied), and a non-deterministic upstream could make the
     # sketches describe different data than was landed (review r11).
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    owned = _persist_unless_cached(df)
     try:
         if not overwrite:
             _refuse_if_pending(spark, path)  # don't compound a crash
@@ -192,7 +203,8 @@ def write_table_with_sketches(
         if fs.exists(p) and not fs.delete(p, False):
             raise IOError(f"failed to clear the pending marker {pending}")
     finally:
-        df.unpersist()
+        if owned:
+            df.unpersist()
 
 
 def _persisted_sketch_width(spark, path: str, col: str) -> int | None:
@@ -254,8 +266,6 @@ def write_partition_with_sketches(
 
     from pyspark.sql import functions as F
 
-    from pyspark.storagelevel import StorageLevel
-
     from dwh_etl_framework_spark.operators.sketch import (
         CMS_W,
         cms_sketch,
@@ -266,7 +276,7 @@ def write_partition_with_sketches(
         raise ValueError("write_partition_with_sketches requires partition_by")
     spark = df.sparkSession
     _refuse_if_pending(spark, path)  # don't compound a crash
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    owned = _persist_unless_cached(df)
     try:
         combos = df.select(*partition_by).distinct().collect()
         if len(combos) != 1:
@@ -320,7 +330,8 @@ def write_partition_with_sketches(
         if fs.exists(p) and not fs.delete(p, False):
             raise IOError(f"failed to clear the pending marker {pending}")
     finally:
-        df.unpersist()
+        if owned:
+            df.unpersist()
     return tag
 
 

@@ -218,3 +218,15 @@ def test_stream_ingest_error_reported_not_fatal():
     parsed = json.loads(line)
     assert parsed["stream_ingest_error"].startswith("RuntimeError")
     assert parsed["value"] is not None  # headline total unaffected
+
+
+def test_stream_timeout_stops_query_and_reports_error(spark, monkeypatch):
+    # force the timeout: no availableNow run finishes within 1 ms
+    import bench
+    from tests.conftest import SF_DIR
+
+    monkeypatch.setattr(bench, "STREAM_TIMEOUT_S", 0.001)
+    sec, err = bench._stream_ingest_metric(spark, SF_DIR)
+    assert sec is None
+    assert err.startswith("TimeoutError: stream_ingest_dedup rep 0")
+    assert spark.streams.active == []  # stopped, not left running
