@@ -51,7 +51,6 @@ class Pipeline:
     #: declared join_strategy (keyed by step alias) — the run's plan
     #: audit trail, surfaced for logging/inspection.
     last_join_decisions: dict = field(default_factory=dict)
-    _seqno: int = field(default=0)
 
     def spec(self) -> JournalSpec:
         if not self.table.primary_key:
@@ -129,7 +128,6 @@ class Pipeline:
         if prev is not None and now <= prev:
             now = prev + timedelta(microseconds=1)
         self._last_load_dt = now
-        self._seqno += 1  # write counter (kept for observability)
         stamped = stamp_journal_columns(df, transform_dt, load_dt=now)
         if write_mode == "overwrite" or self.journal is None:
             self.journal = stamped

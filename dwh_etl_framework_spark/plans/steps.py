@@ -59,6 +59,12 @@ class StepContext:
     join_decisions: dict[str, object] = field(default_factory=dict)
 
 
+def _resolve_view(ctx: StepContext, name: str) -> DataFrame:
+    """A step input by name: a DataFrame of this run, else a table."""
+    df = ctx.dataframes.get(name)
+    return df if df is not None else ctx.spark.table(name)
+
+
 def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
     """Sketch-driven join planning for a select step (the x105 decision
     at the pipeline-config surface; see ``TransformStep.join_strategy``).
@@ -98,10 +104,6 @@ def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
         choose_join_strategy,
         cms_sketch,
     )
-
-    def resolve(name: str) -> DataFrame:
-        df = ctx.dataframes.get(name)
-        return df if df is not None else ctx.spark.table(name)
 
     def persisted_sketch(
         name: str, key: str, state_dir: str | None, table_path: str | None
@@ -168,13 +170,13 @@ def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
         w = CMS_W
     # Phase 2: inline sides sketch at the resolved width.
     lsk, lw = lp if lp is not None else (
-        cms_sketch(resolve(left).select(lkey), lkey, w).localCheckpoint(
+        cms_sketch(_resolve_view(ctx, left).select(lkey), lkey, w).localCheckpoint(
             eager=True
         ),
         w,
     )
     rsk, rw = rp if rp is not None else (
-        cms_sketch(resolve(right).select(rkey), rkey, w).localCheckpoint(
+        cms_sketch(_resolve_view(ctx, right).select(rkey), rkey, w).localCheckpoint(
             eager=True
         ),
         w,
@@ -215,16 +217,16 @@ def plan_step_join(ctx: StepContext, spec: Mapping) -> tuple:
         parallelism=int(par) if par is not None else None,
     )
     if decision.strategy == "broadcast_left":
-        shaped = {left: F.broadcast(resolve(left))}
+        shaped = {left: F.broadcast(_resolve_view(ctx, left))}
     elif decision.strategy == "broadcast_right":
-        shaped = {right: F.broadcast(resolve(right))}
+        shaped = {right: F.broadcast(_resolve_view(ctx, right))}
     else:
         n = decision.shuffle_partitions
         shaped = {
-            left: resolve(left).repartition(n, F.col(lkey)),
-            right: resolve(right).repartition(n, F.col(rkey)),
+            left: _resolve_view(ctx, left).repartition(n, F.col(lkey)),
+            right: _resolve_view(ctx, right).repartition(n, F.col(rkey)),
         }
-    originals = {name: resolve(name) for name in shaped}
+    originals = {name: _resolve_view(ctx, name) for name in shaped}
     for name, df in shaped.items():
         df.createOrReplaceTempView(name)
         ctx.dataframes[name] = df
@@ -279,10 +281,6 @@ def plan_step_join_order(ctx: StepContext, spec: Mapping) -> tuple:
         choose_join_order_from_metadata,
     )
 
-    def resolve(name: str) -> DataFrame:
-        df = ctx.dataframes.get(name)
-        return df if df is not None else ctx.spark.table(name)
-
     if "chain" in spec:
         elems = spec["chain"]
         tabs: list[tuple] = []
@@ -294,7 +292,7 @@ def plan_step_join_order(ctx: StepContext, spec: Mapping) -> tuple:
             else:
                 tabs.append((e["table"], e["left_key"], e["right_key"]))
         order = choose_chain_join_order_from_metadata(ctx.spark, tabs)
-        dfs = [resolve(e["view"]) for e in elems]
+        dfs = [_resolve_view(ctx, e["view"]) for e in elems]
         seq = order["order"]
         chain = dfs[seq[0]]
         lo = hi = seq[0]
@@ -313,9 +311,9 @@ def plan_step_join_order(ctx: StepContext, spec: Mapping) -> tuple:
             (spec["mid_table"], spec["mid_left_key"], spec["mid_right_key"]),
             (spec["right_table"], spec["right_key"]),
         )
-        left = resolve(spec["left"])
-        mid = resolve(spec["mid"])
-        right = resolve(spec["right"])
+        left = _resolve_view(ctx, spec["left"])
+        mid = _resolve_view(ctx, spec["mid"])
+        right = _resolve_view(ctx, spec["right"])
         cond_lm = left[spec["left_key"]] == mid[spec["mid_left_key"]]
         cond_mr = mid[spec["mid_right_key"]] == right[spec["right_key"]]
         if order["chosen"] == "lm_first":

@@ -11,9 +11,42 @@ Reference parity (SURVEY.md §2a):
   at 100 TB the thing that matters is emitting sanely-sized files, so the
   writer repartitions by the partition columns (or to a target partition
   count) before writing.
+
+Landed sketch layout
+--------------------
+A sketched landing (:func:`write_table_with_sketches`,
+:func:`write_partition_with_sketches`, :func:`rebuild_table_sketches`,
+:func:`subtract_table_sketch`) writes planner metadata inside the table
+dir, under ``<path>/_sketches/`` — hidden from plain reads by the
+leading underscore:
+
+- ``<col>/`` — count-min counter fragments ``(r, col, cnt, __cms_w)``,
+  one parquet file per landing (``coalesce(1)``). ``__cms_w`` is the
+  width the counters were hashed at. Readers SUM every fragment, so all
+  fragments of a key must share one width; Σcnt = d·N is the exact row
+  count.
+- ``<col>__hll/`` — HLL register fragments ``(bucket, reg)``; readers
+  MAX-merge them into the key's NDV.
+- ``part_<c>=<v>[_<c>=<v>…]/`` under either tier — one hive partition's
+  fragment, replaced (not appended) when the partition is re-landed;
+  ``<col>/erasure_<id>/`` — one erasure's negated counters. Readers
+  look into subdirectories recursively.
+- ``_pending_<id>`` — a sketched write started and has not finished
+  (the data dir may hold rows no fragment covers). Every reader
+  refuses while one exists.
+- ``<col>__hll_invalidated`` — an erasure removed ``<col>__hll``, since
+  MAX registers cannot subtract. Writers land no HLL fragment for the
+  key and NDV readers refuse until a rebuild or an overwrite.
+
+Append landings add top-level fragments; overwrite landings replace the
+whole table dir, so the metadata always describes exactly the data dir.
 """
 
 from __future__ import annotations
+
+import uuid
+from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame
 
@@ -50,6 +83,8 @@ def overwrite_table(df: DataFrame, path: str, fmt: str = "parquet", **kwargs) ->
 
 
 # ---- sketch metadata at sink time (VERDICT r10 #6) ----------------------
+# Every path under ``_sketches/`` is built by the private helpers below;
+# the layout itself is described in the module docstring.
 
 #: metadata subdirectory inside the table path. The leading underscore
 #: matters: Spark's file index treats ``_*`` paths as hidden, so a plain
@@ -58,19 +93,27 @@ def overwrite_table(df: DataFrame, path: str, fmt: str = "parquet", **kwargs) ->
 #: convention as ``_SUCCESS``/``_metadata``).
 SKETCH_DIR = "_sketches"
 
-#: commit-intent marker (``_sketches/_pending_<id>``): present from just
-#: before a sketched write's first side effect until every fragment has
-#: landed. Readers REFUSE while one exists — a crashed write can therefore
-#: never serve an undercounting sketch silently (ADVICE r11 #1).
+#: commit-intent marker (``_sketches/_pending_<id>``), see "Landed
+#: sketch layout": readers refuse while one exists (ADVICE r11 #1).
 PENDING_PREFIX = "_pending_"
 
-#: erasure tombstone (``_sketches/<col>__hll_invalidated``): the HLL NDV
-#: tier is MAX-merge-only, so erasure removes it; the tombstone keeps a
-#: later append from quietly recreating a registers-cover-only-new-rows
-#: tier (ADVICE r11 #2). Cleared only by a full-scan rebuild or an
-#: overwrite (which wipes the whole table dir, tombstone included, and
-#: lands a complete fresh HLL).
+#: erasure tombstone (``_sketches/<col>__hll_invalidated``), see "Landed
+#: sketch layout" (ADVICE r11 #2). Cleared only by a full-scan rebuild
+#: or an overwrite (which wipes the whole table dir).
 HLL_TOMBSTONE_SUFFIX = "__hll_invalidated"
+
+_HLL_SUFFIX = "__hll"
+
+
+def _hadoop_fs(spark, path: str):
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _exists(spark, path: str) -> bool:
+    fs, p = _hadoop_fs(spark, path)
+    return fs.exists(p)
 
 
 def _touch(spark, path: str) -> None:
@@ -78,22 +121,42 @@ def _touch(spark, path: str) -> None:
     fs.create(p, True).close()
 
 
-def _sketch_markers(spark, path: str) -> tuple[list[str], list[str]]:
-    """(pending write markers, HLL erasure tombstones) under _sketches/."""
-    fs, p = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}")
+def _remove(spark, path: str) -> None:
+    """Delete ``path`` (recursively) if it exists; a failed delete raises."""
+    fs, p = _hadoop_fs(spark, path)
+    if fs.exists(p) and not fs.delete(p, True):
+        raise IOError(f"failed to delete {path}")
+
+
+def _sketch_path(path: str, name: str = "", sub: str = "") -> str:
+    return "/".join(s for s in (path, SKETCH_DIR, name, sub) if s)
+
+
+def _read_fragments(spark, path: str, col: str, tier: str = "") -> DataFrame:
+    """Every fragment of one key tier, subdirectories included."""
+    return spark.read.option("recursiveFileLookup", "true").parquet(
+        _sketch_path(path, col + tier)
+    )
+
+
+def _sketch_entries(spark, path: str, dirs: bool) -> list[str]:
+    """Names of the dirs (``dirs``) or files directly under _sketches/."""
+    fs, p = _hadoop_fs(spark, _sketch_path(path))
     if not fs.exists(p):
-        return [], []
-    names = [
-        st.getPath().getName() for st in fs.listStatus(p) if st.isFile()
-    ]
-    return (
-        sorted(n for n in names if n.startswith(PENDING_PREFIX)),
-        sorted(n for n in names if n.endswith(HLL_TOMBSTONE_SUFFIX)),
+        return []
+    return sorted(
+        st.getPath().getName()
+        for st in fs.listStatus(p)
+        if st.isDirectory() == dirs
     )
 
 
 def _refuse_if_pending(spark, path: str) -> None:
-    pending, _ = _sketch_markers(spark, path)
+    pending = [
+        n
+        for n in _sketch_entries(spark, path, dirs=False)
+        if n.startswith(PENDING_PREFIX)
+    ]
     if pending:
         raise IOError(
             f"sketch metadata at {path!r} is inconsistent: a sketched write "
@@ -101,6 +164,108 @@ def _refuse_if_pending(spark, path: str) -> None:
             "may contain rows the sketches don't cover. Re-run "
             "rebuild_table_sketches() to rescan and republish."
         )
+
+
+@contextmanager
+def _pending_write(spark, path: str):
+    """Bracket a non-atomic sketched write: touch ``_pending_<id>`` on
+    entry and delete it only when the body returns, so a write that
+    raises or dies midway leaves every reader refusing until
+    :func:`rebuild_table_sketches` republishes. Yields the marker name."""
+    name = f"{PENDING_PREFIX}{uuid.uuid4().hex}"
+    marker = _sketch_path(path, name)
+    _touch(spark, marker)
+    yield name
+    _remove(spark, marker)
+
+
+def _landed_keys(spark, path: str) -> list[str]:
+    """The keys with a CMS dir under ``_sketches/`` (no pending check)."""
+    return [
+        n
+        for n in _sketch_entries(spark, path, dirs=True)
+        if not n.endswith(_HLL_SUFFIX)
+    ]
+
+
+def _width_error(path: str, col: str, widths) -> ValueError:
+    return ValueError(
+        f"sketch fragments for {col!r} at {path!r} carry mixed widths "
+        f"{sorted(widths)} — rebuild_table_sketches(w=...) rewrites them "
+        "at one width"
+    )
+
+
+def _persisted_sketch_width(spark, path: str, col: str) -> int | None:
+    """The one ``__cms_w`` that ``col``'s landed CMS fragments carry, or
+    None when the key has no fragment dir. Mixed (or no) widths raise
+    ValueError; an unreadable fragment raises Spark's read error."""
+    if not _exists(spark, _sketch_path(path, col)):
+        return None
+    raw = _read_fragments(spark, path, col)
+    widths = [r["__cms_w"] for r in raw.select("__cms_w").distinct().collect()]
+    if len(widths) != 1:
+        raise _width_error(path, col, widths)
+    return int(widths[0])
+
+
+def _land_key_sketch(
+    df: DataFrame,
+    path: str,
+    col: str,
+    w: int,
+    mode: str,
+    sub: str = "",
+    negate: bool = False,
+) -> None:
+    """Land ``col``'s fragments of ``df`` into ``<col>[/<sub>]``: the CMS
+    counters at width ``w`` (negated for an erasure), then the HLL
+    registers into ``<col>__hll[/<sub>]`` unless the key is tombstoned —
+    a recreated tier would cover only these rows and silently undercount
+    every surviving key (ADVICE r11 #2)."""
+    from pyspark.sql import functions as F
+
+    from dwh_etl_framework_spark.operators.sketch import (
+        cms_sketch,
+        hll_registers,
+    )
+
+    cms = cms_sketch(df.select(col), col, w)
+    if negate:
+        cms = cms.withColumn("cnt", -F.col("cnt"))
+    cms.withColumn("__cms_w", F.lit(w)).coalesce(1).write.mode(mode).parquet(
+        _sketch_path(path, col, sub)
+    )
+    if _exists(df.sparkSession, _sketch_path(path, col + HLL_TOMBSTONE_SUFFIX)):
+        return
+    regs = hll_registers(df.select(col), [], col)
+    regs.coalesce(1).write.mode(mode).parquet(
+        _sketch_path(path, col + _HLL_SUFFIX, sub)
+    )
+
+
+def _partition_tag(partition_by: list[str], row) -> str:
+    return "part_" + "_".join(f"{c}={row[c]}" for c in partition_by)
+
+
+def _hive_partition_cols(spark, path: str) -> list[str]:
+    """The partition columns of a hive-layout data dir, read off its
+    first chain of ``<col>=<value>`` subdirectories ([] when flat)."""
+    cols: list[str] = []
+    fs, p = _hadoop_fs(spark, path)
+    while sub := next(
+        (
+            st.getPath()
+            for st in fs.listStatus(p)
+            if st.isDirectory()
+            and "=" in st.getPath().getName()
+            and not st.getPath().getName().startswith(".")
+        ),
+        None,
+    ):
+        cols.append(sub.getName().split("=", 1)[0])
+        p = sub
+    return cols
 
 
 def _persist_unless_cached(df: DataFrame) -> bool:
@@ -125,48 +290,28 @@ def write_table_with_sketches(
     w: int | None = None,
     **kwargs,
 ) -> None:
-    """F17 + planner statistics: land the table AND a CMS sketch per key
-    column under ``<path>/_sketches/<col>/``. CMS counters SUM-merge, so
-    ``append`` writes append counter FRAGMENTS (one per write; readers
-    merge-on-read by summing), and ``overwrite`` replaces them with the
-    new table's sketch — the sketch directory always describes exactly
-    the data directory's content.
+    """F17 + planner statistics: land the table AND, per key column, a
+    CMS and an HLL fragment at width ``w`` (module docstring, "Landed
+    sketch layout"). ``append`` adds fragments, ``overwrite`` replaces
+    the whole table dir, so the sketches always describe exactly the
+    data directory's content.
 
-    Crash consistency (ADVICE r11 #1): the data write and the sketch
-    writes are not one atomic commit, so a ``_pending_<id>`` marker
-    brackets the non-atomic span and every reader refuses while it
-    exists. Append mode sets the marker BEFORE the data append (the only
-    silent window is data-landed-sketch-missing); overwrite mode sets it
-    right AFTER (the data overwrite wipes the whole dir, so a crash
-    before the marker leaves ``_sketches/`` absent — already fail-loud).
-    A crashed write therefore always reads as loud-broken until
-    :func:`rebuild_table_sketches` republishes from a full scan.
-
-    Erasure interplay (ADVICE r11 #2): an append over an erasure
-    tombstone (:func:`subtract_table_sketch` removed the MAX-merge-only
-    HLL tier) appends the CMS fragment but SKIPS the HLL fragment — a
-    recreated tier would cover only the new rows and silently undercount
-    every surviving pre-erasure key. The NDV tier stays loud-absent
-    until a rebuild or a full overwrite.
+    The data write and the fragment writes are not one atomic commit,
+    so a pending marker brackets the span (ADVICE r11 #1). Append mode
+    sets it BEFORE the data append; overwrite mode sets it right AFTER
+    the data overwrite, which wipes ``_sketches/`` (a crash before the
+    marker leaves the metadata absent — already fail-loud). Over an
+    erasure tombstone only the CMS fragment lands.
 
     This is the 100 TB serving shape the x105 decision table claims: the
     broadcast-vs-shuffle choice (:func:`decision_from_metadata`) then
     reads two ≤ d·w counter tables instead of scanning either input —
     per-day/per-partition sketches merge by the same SUM."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from dwh_etl_framework_spark.operators.sketch import (
-        CMS_W,
-        cms_sketch,
-        hll_registers,
-    )
+    from dwh_etl_framework_spark.operators.sketch import CMS_W
 
     eff_w = int(w or CMS_W)
     spark = df.sparkSession
     overwrite = mode == "overwrite"
-    pending = f"{path}/{SKETCH_DIR}/{PENDING_PREFIX}{uuid.uuid4().hex}"
     # One materialization serves the table write AND every sketch pass:
     # without it, each cms/hll build re-executes the DataFrame's full
     # lineage (2 extra passes per key — a landed master's whole merge
@@ -174,56 +319,18 @@ def write_table_with_sketches(
     # sketches describe different data than was landed (review r11).
     owned = _persist_unless_cached(df)
     try:
-        if not overwrite:
-            _refuse_if_pending(spark, path)  # don't compound a crash
-            _touch(spark, pending)
-        write_table(df, path, fmt=fmt, mode=mode, **kwargs)
         if overwrite:
-            _touch(spark, pending)
-        _, tombstones = _sketch_markers(spark, path)
-        for col in sketch_keys:
-            sk = cms_sketch(df.select(col), col, eff_w).withColumn(
-                "__cms_w", F.lit(eff_w)
-            )
-            sk.coalesce(1).write.mode(mode).parquet(
-                f"{path}/{SKETCH_DIR}/{col}"
-            )
-            if f"{col}{HLL_TOMBSTONE_SUFFIX}" in tombstones:
-                continue  # see "Erasure interplay" above
-            # NDV tier: per-key HLL registers (MAX-mergeable, so appended
-            # fragments merge-on-read like the CMS counters SUM). NDV
-            # feeds the System-R join-output estimate
-            # (:func:`ndv_join_estimate`) — the TIGHT companion to the
-            # CMS inner product's SAFE bound.
-            regs = hll_registers(df.select(col), [], col)
-            regs.coalesce(1).write.mode(mode).parquet(
-                f"{path}/{SKETCH_DIR}/{col}__hll"
-            )
-        fs, p = _hadoop_fs(spark, pending)
-        if fs.exists(p) and not fs.delete(p, False):
-            raise IOError(f"failed to clear the pending marker {pending}")
+            write_table(df, path, fmt=fmt, mode=mode, **kwargs)
+        else:
+            _refuse_if_pending(spark, path)  # don't compound a crash
+        with _pending_write(spark, path):
+            if not overwrite:
+                write_table(df, path, fmt=fmt, mode=mode, **kwargs)
+            for col in sketch_keys:
+                _land_key_sketch(df, path, col, eff_w, mode)
     finally:
         if owned:
             df.unpersist()
-
-
-def _persisted_sketch_width(spark, path: str, col: str) -> int | None:
-    """The ``__cms_w`` the landed fragments for ``col`` carry, or None if
-    no fragment exists yet. Raises on mixed widths (a crashed mixed
-    write needs an explicit rebuild)."""
-    fs, p = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}/{col}")
-    if not fs.exists(p):
-        return None
-    raw = spark.read.option("recursiveFileLookup", "true").parquet(
-        f"{path}/{SKETCH_DIR}/{col}"
-    )
-    widths = [r["__cms_w"] for r in raw.select("__cms_w").distinct().collect()]
-    if len(widths) > 1:
-        raise ValueError(
-            f"mixed persisted widths {sorted(widths)} for {col!r} at "
-            f"{path!r} — rebuild_table_sketches(w=...) to repair"
-        )
-    return int(widths[0]) if widths else None
 
 
 def write_partition_with_sketches(
@@ -236,41 +343,23 @@ def write_partition_with_sketches(
 ) -> str:
     """Idempotently land ONE partition of a hive-partitioned table plus
     its per-partition sketch fragments — the 100 TB serving shape the
-    f38 metadata loop claims (per-day fragments merged on read,
-    ``write_table_with_sketches`` docstring): a daily ingest job calls
-    this once per day, and a RE-RUN of the same day REPLACES both the
-    data partition and its fragments instead of double-counting.
+    f38 metadata loop claims: a daily ingest job calls this once per
+    day, and a RE-RUN of the same day REPLACES both the data partition
+    and its ``part_<...>`` fragments (module docstring) instead of
+    double-counting.
 
-    Mechanics:
-
-    - ``df`` must contain exactly one distinct combination of
-      ``partition_by`` values (validated — the combination names the
-      fragment subdirectory, e.g. ``_sketches/<col>/part_day=2024-01-05``).
-    - the data lands under Spark's DYNAMIC partition-overwrite mode, so
-      ``mode("overwrite")`` replaces only the touched hive partition
-      (the conf is set for the write and restored after);
-    - each key's CMS/HLL fragments land with ``mode("overwrite")`` in
-      the partition-named subdirectory — same idempotence contract as
-      ``subtract_table_sketch``'s ``erasure_<id>`` fragments; readers
-      merge-on-read recursively, so per-partition fragments SUM (CMS) /
-      MAX (HLL) to exactly the whole table's sketch;
-    - a ``_pending`` marker brackets the non-atomic span exactly like
-      :func:`write_table_with_sketches` append mode, and the erasure
-      tombstone interplay is identical (no HLL fragment over a
-      tombstone).
+    ``df`` must contain exactly one distinct combination of
+    ``partition_by`` values (validated — it names the fragment
+    subdirectory, e.g. ``part_day=2024-01-05``). The data lands under
+    Spark's DYNAMIC partition-overwrite mode, so only the touched hive
+    partition is replaced (the conf is restored after). A pending marker
+    brackets the data and fragment writes, and the tombstone interplay
+    is :func:`write_table_with_sketches`'s.
 
     Width adopts the landed fragments' ``__cms_w`` when ``w`` is not
     given; an explicit conflicting ``w`` raises rather than stranding
     unmergeable fragments. Returns the partition tag."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from dwh_etl_framework_spark.operators.sketch import (
-        CMS_W,
-        cms_sketch,
-        hll_registers,
-    )
+    from dwh_etl_framework_spark.operators.sketch import CMS_W
 
     if not partition_by:
         raise ValueError("write_partition_with_sketches requires partition_by")
@@ -285,9 +374,7 @@ def write_partition_with_sketches(
                 " — write_partition_with_sketches lands exactly one partition"
                 " per call (split the input by partition first)"
             )
-        tag = "part_" + "_".join(
-            f"{c}={combos[0][c]}" for c in partition_by
-        )
+        tag = _partition_tag(partition_by, combos[0])
         eff_w = int(w or CMS_W)
         for col in sketch_keys:
             landed = _persisted_sketch_width(spark, path, col)
@@ -298,37 +385,24 @@ def write_partition_with_sketches(
                         f"{landed} for {col!r} at {path!r}"
                     )
                 eff_w = landed
-        pending = f"{path}/{SKETCH_DIR}/{PENDING_PREFIX}{uuid.uuid4().hex}"
-        _touch(spark, pending)
-        previous = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            write_table(
-                df, path, fmt=fmt, mode="overwrite", partition_by=partition_by
+        with _pending_write(spark, path):
+            previous = spark.conf.get(
+                "spark.sql.sources.partitionOverwriteMode", "static"
             )
-        finally:
             spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", previous
+                "spark.sql.sources.partitionOverwriteMode", "dynamic"
             )
-        _, tombstones = _sketch_markers(spark, path)
-        for col in sketch_keys:
-            sk = cms_sketch(df.select(col), col, eff_w).withColumn(
-                "__cms_w", F.lit(eff_w)
-            )
-            sk.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/{SKETCH_DIR}/{col}/{tag}"
-            )
-            if f"{col}{HLL_TOMBSTONE_SUFFIX}" in tombstones:
-                continue  # see write_table_with_sketches "Erasure interplay"
-            regs = hll_registers(df.select(col), [], col)
-            regs.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/{SKETCH_DIR}/{col}__hll/{tag}"
-            )
-        fs, p = _hadoop_fs(spark, pending)
-        if fs.exists(p) and not fs.delete(p, False):
-            raise IOError(f"failed to clear the pending marker {pending}")
+            try:
+                write_table(
+                    df, path, fmt=fmt, mode="overwrite",
+                    partition_by=partition_by,
+                )
+            finally:
+                spark.conf.set(
+                    "spark.sql.sources.partitionOverwriteMode", previous
+                )
+            for col in sketch_keys:
+                _land_key_sketch(df, path, col, eff_w, "overwrite", sub=tag)
     finally:
         if owned:
             df.unpersist()
@@ -342,132 +416,96 @@ def rebuild_table_sketches(
     w: int | None = None,
     fmt: str = "parquet",
 ) -> list[str]:
-    """Full-scan repair of a table's sketch metadata: recompute one CMS
-    fragment + one HLL fragment per key from the CURRENT data directory,
-    overwrite the per-key sketch dirs, then clear every pending marker
-    and erasure tombstone. This is the recovery path the loud failures
-    point at — a crashed :func:`write_table_with_sketches` append or an
-    erasure-invalidated NDV tier.
+    """Full-scan repair of a table's sketch metadata: recompute every
+    key's CMS and HLL fragments from the CURRENT data directory, replace
+    the key dirs, and clear every pending marker and erasure tombstone.
+    This is the recovery path the loud failures point at — a crashed
+    sketched write or an erasure-invalidated NDV tier.
 
-    Markers are cleared LAST, so a crash mid-rebuild leaves the
-    metadata loud-broken (re-run to finish), never silently partial.
-    Returns the rebuilt key list. ``sketch_keys`` defaults to the keys
-    with existing sketch dirs; ``w`` defaults to each key's persisted
-    width when unambiguous (mixed-width fragments from a crash require
-    an explicit ``w``)."""
+    A hive-partitioned data dir (partition columns read off its
+    ``<col>=<value>`` layout) gets one ``part_<...>`` fragment per
+    partition, the tags :func:`write_partition_with_sketches` uses, so a
+    later re-land of a day replaces that day's rows instead of adding
+    them a second time; a flat dir gets one fragment per tier.
+
+    The rebuild runs under its own pending marker, so a crash midway
+    leaves the metadata loud-broken (re-run to finish), never silently
+    partial. Returns the rebuilt key list. ``sketch_keys`` defaults to
+    the keys with existing sketch dirs; ``w`` defaults to each key's
+    landed width (:data:`CMS_W` when it has none). Mixed widths or an
+    unreadable fragment raise unless ``w`` is given."""
     from pyspark.sql import functions as F
-
     from pyspark.storagelevel import StorageLevel
 
-    from dwh_etl_framework_spark.operators.sketch import (
-        CMS_W,
-        cms_sketch,
-        hll_registers,
-    )
+    from dwh_etl_framework_spark.operators.sketch import CMS_W
 
-    fs, sk_root = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}")
     if sketch_keys is None:
-        if not fs.exists(sk_root):
-            raise ValueError(
-                f"no sketch dir at {path!r} — pass sketch_keys explicitly"
-            )
-        sketch_keys = sorted(
-            st.getPath().getName()
-            for st in fs.listStatus(sk_root)
-            if st.isDirectory() and not st.getPath().getName().endswith("__hll")
-        )
+        sketch_keys = _landed_keys(spark, path)
     if not sketch_keys:
-        raise ValueError(f"nothing to rebuild under {path!r}")
-
-    def _width_for(col: str) -> int:
-        if w is not None:
-            return int(w)
-        try:
-            raw = spark.read.option("recursiveFileLookup", "true").parquet(
-                f"{path}/{SKETCH_DIR}/{col}"
-            )
-            widths = [
-                r["__cms_w"] for r in raw.select("__cms_w").distinct().collect()
-            ]
-        except Exception:
-            return CMS_W
-        if len(widths) > 1:
-            raise ValueError(
-                f"mixed persisted widths {sorted(widths)} for {col!r} — "
-                "pass w= explicitly to rebuild_table_sketches"
-            )
-        return int(widths[0]) if widths else CMS_W
+        raise ValueError(
+            f"no sketched keys under {path!r} — pass sketch_keys explicitly"
+        )
+    widths = {
+        col: int(w)
+        if w is not None
+        else _persisted_sketch_width(spark, path, col) or CMS_W
+        for col in sketch_keys
+    }
+    partition_by = _hive_partition_cols(spark, path)
 
     df = spark.read.format(fmt).load(path).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        for col in sketch_keys:
-            eff_w = _width_for(col)
-            sk = cms_sketch(df.select(col), col, eff_w).withColumn(
-                "__cms_w", F.lit(eff_w)
-            )
-            sk.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/{SKETCH_DIR}/{col}"
-            )
-            regs = hll_registers(df.select(col), [], col)
-            regs.coalesce(1).write.mode("overwrite").parquet(
-                f"{path}/{SKETCH_DIR}/{col}__hll"
-            )
+        parts = [("", df)]
+        if partition_by:
+            parts = []
+            for row in df.select(*partition_by).distinct().collect():
+                part = df
+                for c in partition_by:
+                    part = part.filter(F.col(c).eqNullSafe(row[c]))
+                parts.append((_partition_tag(partition_by, row), part))
+        with _pending_write(spark, path) as own:
+            for name in _sketch_entries(spark, path, dirs=False):
+                if name != own and (
+                    name.startswith(PENDING_PREFIX)
+                    or name.endswith(HLL_TOMBSTONE_SUFFIX)
+                ):
+                    _remove(spark, _sketch_path(path, name))
+            for col in sketch_keys:
+                _remove(spark, _sketch_path(path, col))
+                _remove(spark, _sketch_path(path, col + _HLL_SUFFIX))
+                for tag, part in parts:
+                    _land_key_sketch(
+                        part, path, col, widths[col], "overwrite", sub=tag
+                    )
     finally:
         df.unpersist()
-    pending, tombstones = _sketch_markers(spark, path)
-    for name in pending + tombstones:
-        mfs, mp = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}/{name}")
-        if mfs.exists(mp) and not mfs.delete(mp, False):
-            raise IOError(f"failed to clear marker {name} after rebuild")
     return list(sketch_keys)
 
 
 def read_table_sketch(spark, path: str, col: str) -> tuple[DataFrame, int]:
-    """Merge-on-read of a persisted key sketch: SUM the counter fragments
-    appended by successive writes into one (r, col, cnt) table. Returns
-    ``(sketch, w)`` and refuses mixed widths (fragments written at
-    different ``w`` do not merge — the plans/steps width guard) as well
-    as a crashed unpublished write (pending marker — the data dir may
-    hold rows no fragment covers)."""
+    """Merge-on-read of a persisted key sketch: SUM every counter
+    fragment of ``col`` (module docstring) into one (r, col, cnt) table.
+    Returns ``(sketch, w)`` and refuses mixed widths (fragments written
+    at different ``w`` do not merge — the plans/steps width guard) as
+    well as a crashed unpublished write (pending marker — the data dir
+    may hold rows no fragment covers)."""
     from pyspark.sql import functions as F
 
     _refuse_if_pending(spark, path)
-    # recursive: erasure corrections live in erasure_<id> subdirectories
-    # (idempotent overwrite targets) next to the top-level fragments
-    raw = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(f"{path}/{SKETCH_DIR}/{col}")
+    w = _persisted_sketch_width(spark, path, col)
+    merged = (
+        _read_fragments(spark, path, col)  # no fragment dir: Spark's error
+        .groupBy("r", "col")
+        .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
-    widths = [r["__cms_w"] for r in raw.select("__cms_w").distinct().collect()]
-    if len(widths) != 1:
-        raise ValueError(
-            f"sketch fragments for {col!r} at {path!r} carry mixed widths "
-            f"{sorted(widths)} — rewrite the sketch dir at one width"
-        )
-    merged = raw.groupBy("r", "col").agg(
-        F.sum("cnt").cast("long").alias("cnt")
-    )
-    return merged, int(widths[0])
-
-
-def _hadoop_fs(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+    return merged, w
 
 
 def sketched_keys(spark, path: str) -> list[str]:
     """The key columns a landed table carries sketches for (the
     ``_sketches/`` child dirs, HLL siblings excluded)."""
     _refuse_if_pending(spark, path)
-    fs, hpath = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}")
-    if not fs.exists(hpath):
-        return []
-    return sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(hpath)
-        if st.isDirectory() and not st.getPath().getName().endswith("__hll")
-    )
+    return _landed_keys(spark, path)
 
 
 def subtract_table_sketch(
@@ -486,87 +524,47 @@ def subtract_table_sketch(
 
     Fail-closed + idempotent by construction (review r11):
 
-    - the non-subtractable HLL tier (MAX registers) is removed FIRST via
-      the Hadoop FS API (works on any filesystem; a failed delete
-      raises) — a crash mid-way leaves NDV readers failing loudly, never
-      serving erased keys;
+    - the non-subtractable HLL tier (MAX registers) is removed FIRST and
+      the key tombstoned (module docstring) — a crash mid-way leaves NDV
+      readers failing loudly, never serving erased keys;
     - each negative fragment lands with ``mode("overwrite")`` in its own
       ``erasure_<erasure_id>`` subdirectory, so re-running the same
       erasure (crash recovery, at-least-once orchestration) REPLACES its
       fragment instead of double-subtracting. ``erasure_id`` must
       uniquely name the erasure batch (e.g. the request id)."""
-    from pyspark.sql import functions as F
-
-    from dwh_etl_framework_spark.operators.sketch import cms_sketch
-
     keys = cols if cols is not None else sketched_keys(spark, path)
     if not keys:
         raise ValueError(f"no sketched keys found under {path!r}")
     for col in keys:
-        fs, hll = _hadoop_fs(spark, f"{path}/{SKETCH_DIR}/{col}__hll")
-        if fs.exists(hll) and not fs.delete(hll, True):
-            raise IOError(
-                f"failed to remove the stale NDV tier at {hll} — aborting "
-                "before the CMS subtraction so metadata stays consistent"
-            )
-        # tombstone BEFORE the CMS subtraction: a later append must not
-        # recreate the HLL tier covering only its own rows (ADVICE r11
-        # #2) — read_table_ndv refuses and write_table_with_sketches
-        # skips the HLL fragment until rebuild_table_sketches (or a full
-        # overwrite, which wipes the tombstone with the table dir).
-        _touch(spark, f"{path}/{SKETCH_DIR}/{col}{HLL_TOMBSTONE_SUFFIX}")
+        _remove(spark, _sketch_path(path, col + _HLL_SUFFIX))
+        _touch(spark, _sketch_path(path, col + HLL_TOMBSTONE_SUFFIX))
         _, w = read_table_sketch(spark, path, col)
-        neg = (
-            cms_sketch(erased.select(col), col, w)
-            .withColumn("cnt", -F.col("cnt"))
-            .withColumn("__cms_w", F.lit(w))
-        )
-        neg.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/{SKETCH_DIR}/{col}/erasure_{erasure_id}"
+        _land_key_sketch(
+            erased, path, col, w, "overwrite",
+            sub=f"erasure_{erasure_id}", negate=True,
         )
 
 
 def read_table_ndv(spark, path: str, col: str) -> int:
     """Approximate distinct count of a persisted key, merge-on-read:
-    MAX the HLL register fragments appended by successive writes, then
-    the all-integer estimate (``operators/sketch.hll_estimate`` — ~2%
-    at the configured register count). Never touches the data files.
+    MAX the HLL register fragments, then the all-integer estimate
+    (``operators/sketch.hll_estimate`` — ~2% at the configured register
+    count) with the linear-counting correction. Never touches the data
+    files; one :func:`read_chain_stats` job.
 
     Refuses loudly while the key carries an erasure tombstone or the
     table a pending-write marker: MAX registers can't subtract, so a
     post-erasure NDV needs a full rebuild first."""
-    from pyspark.sql import functions as F
-
-    from dwh_etl_framework_spark.operators.sketch import hll_estimate
-
-    _refuse_if_pending(spark, path)
-    _, tombstones = _sketch_markers(spark, path)
-    if f"{col}{HLL_TOMBSTONE_SUFFIX}" in tombstones:
-        raise IOError(
-            f"the NDV tier for {col!r} at {path!r} was invalidated by a "
-            "right-to-erasure rewrite (MAX registers cannot subtract) — "
-            "run rebuild_table_sketches() to rescan, or overwrite the "
-            "table with a fresh sketched write"
-        )
-    # recursive: per-partition fragments (write_partition_with_sketches)
-    # live in part_* subdirectories; MAX-merge is the HLL union
-    raw = spark.read.option("recursiveFileLookup", "true").parquet(
-        f"{path}/{SKETCH_DIR}/{col}__hll"
-    )
-    merged = raw.groupBy("bucket").agg(F.max("reg").alias("reg"))
-    row = hll_estimate(merged, []).first()
-    # Flajolet's small-range (linear counting) correction: driver-side
-    # float math is fine here — the NDV is a costing statistic, not an
-    # oracle value (the oracled x84 twin pins the integer-only raw
-    # formula instead).
-    return _ndv_linear_correct(int(row["hll_estimate"]), int(row["n_buckets_used"]))
+    _, ndvs = read_chain_stats(spark, [], [(path, col)])
+    return ndvs[0]
 
 
 def _ndv_linear_correct(est: int, n_buckets_used: int) -> int:
-    """Flajolet's small-range (linear counting) correction shared by
-    :func:`read_table_ndv` and the batched :func:`read_chain_stats` —
-    the raw estimator is biased below ~2.5m; with empty registers,
-    m·ln(m/V) is the better estimate."""
+    """Flajolet's small-range (linear counting) correction applied by
+    :func:`read_chain_stats` — the raw estimator is biased below ~2.5m;
+    with empty registers, m·ln(m/V) is the better estimate. Driver-side
+    float math is fine: the NDV is a costing statistic, not an oracle
+    value (the oracled x84 twin pins the integer-only raw formula)."""
     import math
 
     from dwh_etl_framework_spark.operators.sketch import HLL_M
@@ -583,17 +581,13 @@ def read_chain_stats(
     ndvs: list[tuple[str, str]],
 ) -> tuple[list[int], list[int]]:
     """Batched metadata reads for the join-order planners (round 15,
-    guide §5 "the driver should do almost no data work"): the former
-    per-statistic ``read_table_sketch`` + ``cms_cardinality().first()``
-    and ``read_table_ndv`` calls each launched their own tiny Spark job
-    (scan + agg + collect over ≤ d·w counter / m register rows), so
-    planning a k-table chain cost ~2k driver round-trips dominated by
-    fixed per-job overhead — measured ~3 s per warm f40 call at sf0.1.
-    This reader unions every per-statistic single-row aggregate into ONE
-    plan and collects once; the statistics, the mixed-width guard and
-    the pending/tombstone refusals are unchanged (same arithmetic, same
-    error classes — the width check reads the same ``__cms_w`` values,
-    the NDV applies the same linear-counting correction driver-side).
+    guide §5 "the driver should do almost no data work"): one tiny Spark
+    job per statistic would cost planning a k-table chain ~2k driver
+    round-trips dominated by fixed per-job overhead — measured ~3 s per
+    warm f40 call at sf0.1. This reader unions every per-statistic
+    single-row aggregate into ONE plan and collects once. The width
+    check runs inside that job (``collect_set`` of ``__cms_w``), and the
+    pending/tombstone refusals come first.
 
     ``counts``: (table_path, key) pairs → exact row counts from the CMS
     tier. ``ndvs``: (table_path, key) pairs → HLL NDVs. Returns the two
@@ -605,8 +599,7 @@ def read_chain_stats(
     for path in {p for p, _ in counts} | {p for p, _ in ndvs}:
         _refuse_if_pending(spark, path)
     for path, col in ndvs:
-        _, tombstones = _sketch_markers(spark, path)
-        if f"{col}{HLL_TOMBSTONE_SUFFIX}" in tombstones:
+        if _exists(spark, _sketch_path(path, col + HLL_TOMBSTONE_SUFFIX)):
             raise IOError(
                 f"the NDV tier for {col!r} at {path!r} was invalidated by "
                 "a right-to-erasure rewrite (MAX registers cannot "
@@ -616,20 +609,18 @@ def read_chain_stats(
 
     frames = []
     for i, (path, col) in enumerate(counts):
-        raw = spark.read.option("recursiveFileLookup", "true").parquet(
-            f"{path}/{SKETCH_DIR}/{col}"
-        )
         frames.append(
-            raw.agg(
+            _read_fragments(spark, path, col).agg(
                 (F.sum("cnt") / F.lit(CMS_D)).cast("long").alias("n"),
                 F.collect_set("__cms_w").cast("array<long>").alias("aux"),
             ).select(F.lit(f"c{i}").alias("tag"), "n", "aux")
         )
     for i, (path, col) in enumerate(ndvs):
-        raw = spark.read.option("recursiveFileLookup", "true").parquet(
-            f"{path}/{SKETCH_DIR}/{col}__hll"
+        merged = (
+            _read_fragments(spark, path, col, _HLL_SUFFIX)
+            .groupBy("bucket")
+            .agg(F.max("reg").alias("reg"))
         )
-        merged = raw.groupBy("bucket").agg(F.max("reg").alias("reg"))
         frames.append(
             hll_estimate(merged, []).select(
                 F.lit(f"d{i}").alias("tag"),
@@ -639,25 +630,18 @@ def read_chain_stats(
                 .alias("aux"),
             )
         )
-    unioned = frames[0]
-    for f in frames[1:]:
-        unioned = unioned.unionByName(f)
-    rows = {r["tag"]: r for r in unioned.collect()}
+    rows = {r["tag"]: r for r in reduce(DataFrame.unionByName, frames).collect()}
 
     ns: list[int] = []
     for i, (path, col) in enumerate(counts):
         r = rows[f"c{i}"]
-        widths = sorted(r["aux"])
-        if len(widths) != 1:
-            raise ValueError(
-                f"sketch fragments for {col!r} at {path!r} carry mixed "
-                f"widths {widths} — rewrite the sketch dir at one width"
-            )
+        if len(r["aux"]) != 1:
+            raise _width_error(path, col, r["aux"])
         ns.append(int(r["n"]))
-    ds: list[int] = []
-    for i, _ in enumerate(ndvs):
-        r = rows[f"d{i}"]
-        ds.append(_ndv_linear_correct(int(r["n"]), int(r["aux"][0])))
+    ds = [
+        _ndv_linear_correct(int(rows[f"d{i}"]["n"]), int(rows[f"d{i}"]["aux"][0]))
+        for i in range(len(ndvs))
+    ]
     return ns, ds
 
 
@@ -672,7 +656,8 @@ def ndv_join_estimate(
     persisted metadata alone: ``n_l · n_r / max(ndv_l, ndv_r)`` —
     row counts recovered exactly from the CMS counters
     (:func:`~dwh_etl_framework_spark.operators.sketch.cms_cardinality`),
-    distinct counts from the HLL tier.
+    distinct counts from the HLL tier, all in one
+    :func:`read_chain_stats` job.
 
     Division of labor (NOTES r10 weakness #5): the CMS inner product
     NEVER undercounts, so exchanges size from it; this estimate is
@@ -680,14 +665,8 @@ def ndv_join_estimate(
     but assumes per-key uniformity and key containment, so it CAN
     undercount under skew — use it for costing/comparison, never for
     the never-undercounts exchange sizing."""
-    from dwh_etl_framework_spark.operators.sketch import cms_cardinality
-
-    lsk, _ = read_table_sketch(spark, left_path, left_key)
-    rsk, _ = read_table_sketch(spark, right_path, right_key)
-    n_l = int(cms_cardinality(lsk).first()["n_rows"])
-    n_r = int(cms_cardinality(rsk).first()["n_rows"])
-    ndv_l = read_table_ndv(spark, left_path, left_key)
-    ndv_r = read_table_ndv(spark, right_path, right_key)
+    sides = [(left_path, left_key), (right_path, right_key)]
+    (n_l, n_r), (ndv_l, ndv_r) = read_chain_stats(spark, sides, sides)
     denom = max(ndv_l, ndv_r, 1)
     return {
         "n_left": n_l,
@@ -710,40 +689,31 @@ def choose_join_order_from_metadata(
     key_mr)``, ``right=(path, key_mr)``; the chain is
     left ⋈(key_lm) mid ⋈(key_mr) right.
 
-    Row counts are EXACT from the CMS tier (Σcnt = d·N), NDVs from the
-    HLL tier, and the Selinger intermediate-size arithmetic is the
-    x109 spec verbatim — ``tests/test_join_order.py`` pins this result
-    equal to the oracled inline computation. Python's unbounded ints do
-    the products, so (unlike the BIGINT-certified query) this entry
-    point has no 2^63 ceiling. Costing-tier caveat inherited from
+    The k=3 case of :func:`choose_chain_join_order_from_metadata`,
+    reported pairwise: ``est_lm_first``/``est_mr_first`` are the two
+    candidate first-join sizes (the x109 spec verbatim —
+    ``tests/test_join_order.py`` pins this result equal to the oracled
+    inline computation) and ``chosen`` is ``lm_first`` when the DP joins
+    left and mid first (ties go to ``lm_first``). Python's unbounded
+    ints do the products, so (unlike the BIGINT-certified query) this
+    entry point has no 2^63 ceiling. Costing-tier caveat inherited from
     :func:`ndv_join_estimate`: the NDV estimate assumes per-key
     uniformity — use the CMS bound, not this, to SIZE exchanges."""
-    lp, k_lm = left
-    mp, mk_lm, mk_mr = mid
-    rp, k_mr = right
-
-    # one batched job for all 3 counts + 4 NDVs (round 15 — see
-    # read_chain_stats; formerly 7 sequential driver round-trips)
-    ns, raw_ds = read_chain_stats(
-        spark,
-        counts=[(lp, k_lm), (mp, mk_lm), (rp, k_mr)],
-        ndvs=[(lp, k_lm), (mp, mk_lm), (mp, mk_mr), (rp, k_mr)],
+    from dwh_etl_framework_spark.operators.sketch import (
+        chain_interval_estimates,
     )
-    n_l, n_m, n_r = ns
-    d_lm = max(raw_ds[0], raw_ds[1], 1)
-    d_mr = max(raw_ds[2], raw_ds[3], 1)
-    est_lm = (n_l * n_m + d_lm - 1) // d_lm
-    est_mr = (n_m * n_r + d_mr - 1) // d_mr
-    est_final = (est_lm * n_r + d_mr - 1) // d_mr
-    chosen = "lm_first" if est_lm <= est_mr else "mr_first"
+
+    out = choose_chain_join_order_from_metadata(spark, [left, mid, right])
+    n_l, n_m, n_r = out["n_rows"]
+    est = chain_interval_estimates(out["n_rows"], out["edge_ndvs"])
     return {
         "n_left": n_l,
         "n_mid": n_m,
         "n_right": n_r,
-        "est_lm_first": est_lm,
-        "est_mr_first": est_mr,
-        "est_final_rows": est_final,
-        "chosen": chosen,
+        "est_lm_first": est[(0, 1)],
+        "est_mr_first": est[(1, 2)],
+        "est_final_rows": out["est_final"],
+        "chosen": "lm_first" if set(out["order"][:2]) == {0, 1} else "mr_first",
     }
 
 
@@ -753,8 +723,8 @@ def choose_chain_join_order_from_metadata(spark, tables: list[tuple]) -> dict:
     :func:`~dwh_etl_framework_spark.operators.sketch.chain_join_order`):
     every statistic comes from the landed ``_sketches/`` tiers — exact
     row counts from the CMS counters, edge NDVs from the HLL registers —
-    so planning a k-way join costs O(k) metadata reads and ZERO input
-    scans.
+    so planning a k-way join costs one batched metadata job
+    (:func:`read_chain_stats`) and ZERO input scans.
 
     ``tables`` is the chain in join-graph order: first element
     ``(path, right_key)``, middles ``(path, left_key, right_key)``,
@@ -768,34 +738,20 @@ def choose_chain_join_order_from_metadata(spark, tables: list[tuple]) -> dict:
     this, to SIZE exchanges."""
     from dwh_etl_framework_spark.operators.sketch import chain_join_order
 
-    k = len(tables)
-    if k < 2:
+    if len(tables) < 2:
         raise ValueError("a join chain needs at least 2 tables")
-
-    def _keys(idx: int) -> tuple[str | None, str | None]:
-        t = tables[idx]
-        if idx == 0:
-            return None, t[1]
-        if idx == k - 1:
-            return t[1], None
-        return t[1], t[2]
-
-    # one batched job for the k counts + 2(k-1) edge NDVs (round 15 —
-    # see read_chain_stats; formerly ~3k sequential driver round-trips)
-    count_specs = []
-    for idx, t in enumerate(tables):
-        lk, rk = _keys(idx)
-        count_specs.append((t[0], lk or rk))
-    ndv_specs = []
-    for idx in range(k - 1):
-        _, rk = _keys(idx)
-        lk, _ = _keys(idx + 1)
-        ndv_specs.append((tables[idx][0], rk))
-        ndv_specs.append((tables[idx + 1][0], lk))
-    ns, raw_ds = read_chain_stats(spark, counts=count_specs, ndvs=ndv_specs)
-    ds: list[int] = [
-        max(raw_ds[2 * i], raw_ds[2 * i + 1], 1) for i in range(k - 1)
-    ]
+    # a table's count reads its first key; edge i's NDVs read table i's
+    # right (last) key and table i+1's left (first) key
+    ns, raw_ds = read_chain_stats(
+        spark,
+        counts=[(t[0], t[1]) for t in tables],
+        ndvs=[
+            side
+            for a, b in zip(tables, tables[1:])
+            for side in ((a[0], a[-1]), (b[0], b[1]))
+        ],
+    )
+    ds = [max(raw_ds[i], raw_ds[i + 1], 1) for i in range(0, len(raw_ds), 2)]
     out = chain_join_order(ns, ds)
     out["paths"] = [t[0] for t in tables]
     out["n_rows"] = ns

@@ -43,7 +43,7 @@ from dwh_etl_framework_spark.sources.sinks import _hadoop_fs
 
 #: hidden metadata dir inside the table path — underscore prefix keeps a
 #: plain ``spark.read.parquet(table)`` from ever seeing the map rows (the
-#: ``_sketches`` convention, sinks.py:59).
+#: ``_sketches`` convention, ``sinks.SKETCH_DIR``).
 ZONEMAP_DIR = "_zonemaps"
 
 #: hive partition column carrying the fragment id in the data layout.
@@ -149,7 +149,7 @@ def land_fragment_with_zonemap(
     100 TB incremental shape (a daily/partition ingest re-run replaces
     the fragment's data AND its zone-map row instead of serving stale
     bounds), the ``write_partition_with_sketches`` protocol
-    (``sources/sinks.py:217``).
+    (``sources/sinks.py``).
 
     Mechanics: ``df`` must hold exactly ONE distinct fragment id
     (validated); the data lands under dynamic partition-overwrite so only

@@ -146,3 +146,29 @@ def test_partition_pruned_scan_after_partitioned_landing(spark, tmp_path):
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(day" in plan
     assert scan.count() == days[1].count()
+
+
+def test_rebuild_keeps_partition_fragments_so_a_reland_stays_exact(
+    spark, tmp_path
+):
+    """A rebuild of a hive-partitioned table must land per-partition
+    fragments under the writer's tags: a whole-table fragment would make
+    a later re-land of an existing day add that day's rows a second
+    time (the CMS row count is documented as exact)."""
+    from dwh_etl_framework_spark.sources.sinks import rebuild_table_sketches
+
+    days = _orders_by_day(spark)
+    path = str(tmp_path / "orders_by_day")
+    for d in days:
+        write_partition_with_sketches(d, path, ["o_custkey"], ["day"])
+    assert rebuild_table_sketches(spark, path) == ["o_custkey"]
+    frag_dir = tmp_path / "orders_by_day" / "_sketches" / "o_custkey"
+    assert sorted(p.name for p in frag_dir.iterdir() if p.is_dir()) == [
+        "part_day=0", "part_day=1", "part_day=2",
+    ]
+
+    write_partition_with_sketches(days[1], path, ["o_custkey"], ["day"])
+    merged, _ = read_table_sketch(spark, path, "o_custkey")
+    on_disk = spark.read.parquet(path).count()
+    assert int(cms_cardinality(merged).first()["n_rows"]) == on_disk
+    assert on_disk == sum(d.count() for d in days)

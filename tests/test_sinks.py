@@ -5,6 +5,7 @@ prune (airflow_etl.py:433-439)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dwh_etl_framework_spark.sources.sinks import overwrite_table, write_table
@@ -376,3 +377,170 @@ def test_overwrite_after_erasure_clears_tombstone_with_fresh_full_hll(
     survivors = orders.join(erased, ["o_custkey"], "left_anti")
     write_table_with_sketches(survivors, path, ["o_custkey"], mode="overwrite")
     assert read_table_ndv(spark, path, "o_custkey") > 0
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_after(monkeypatch, k: int) -> list[str]:
+    """Make the k-th side effect of a sketched write raise right after
+    it lands: a marker touch, the data write, or a fragment write.
+    Returns the log of side effects seen (k=0 never raises)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from dwh_etl_framework_spark.sources import sinks
+
+    seen: list[str] = []
+
+    def wrap(fn, kind):
+        def inner(*args, **kwargs):
+            out = fn(*args, **kwargs)
+            seen.append(kind)
+            if len(seen) == k:
+                raise _Crash(kind)
+            return out
+
+        return inner
+
+    monkeypatch.setattr(sinks, "_touch", wrap(sinks._touch, "marker"))
+    monkeypatch.setattr(sinks, "write_table", wrap(sinks.write_table, "data"))
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", wrap(DataFrameWriter.parquet, "fragment")
+    )
+    return seen
+
+
+def _assert_readers_refuse(spark, path: str, keys: list[str]) -> None:
+    import pytest
+
+    from dwh_etl_framework_spark.sources.sinks import (
+        choose_chain_join_order_from_metadata,
+        decision_from_metadata,
+        ndv_join_estimate,
+        read_chain_stats,
+        read_table_ndv,
+        read_table_sketch,
+        sketched_keys,
+    )
+
+    k0, k1 = keys
+    for reader in (
+        lambda: read_table_sketch(spark, path, k0),
+        lambda: read_table_ndv(spark, path, k1),
+        lambda: read_chain_stats(spark, [(path, k0)], [(path, k1)]),
+        lambda: sketched_keys(spark, path),
+        lambda: ndv_join_estimate(spark, path, k0, path, k1),
+        lambda: decision_from_metadata(spark, path, k0, path, k1),
+        lambda: choose_chain_join_order_from_metadata(
+            spark, [(path, k0), (path, k1)]
+        ),
+    ):
+        with pytest.raises(IOError, match="pending|crashed"):
+            reader()
+
+
+def _assert_exact(spark, path: str, keys: list[str]) -> None:
+    from dwh_etl_framework_spark.sources.sinks import read_chain_stats
+
+    on_disk = spark.read.parquet(path).count()
+    ns, ndvs = read_chain_stats(spark, [(path, k) for k in keys], [(path, keys[0])])
+    assert ns == [on_disk] * len(keys)
+    assert ndvs[0] > 0
+
+
+def test_append_crash_after_every_side_effect_is_loud_and_rebuildable(
+    spark, tmp_path, monkeypatch
+):
+    """The single crash above, swept: kill an append after each side
+    effect in turn (marker, data, each CMS and each HLL fragment). Every
+    reader refuses, and a rebuild restores exact counts of the rows on
+    disk, whether or not the crashed append's data landed."""
+    from dwh_etl_framework_spark.sources.sinks import (
+        rebuild_table_sketches,
+        write_table_with_sketches,
+    )
+
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    keys = ["o_custkey", "o_orderkey"]
+    path = str(tmp_path / "o")
+    write_table_with_sketches(orders, path, keys, mode="overwrite")
+    batch = orders.limit(100)
+    with monkeypatch.context() as m:
+        effects = _crash_after(m, 0)
+        write_table_with_sketches(batch, path, keys, mode="append")
+    assert effects == ["marker", "data"] + ["fragment"] * 4
+    for k in range(1, len(effects) + 1):
+        with monkeypatch.context() as m:
+            _crash_after(m, k)
+            with pytest.raises(_Crash):
+                write_table_with_sketches(batch, path, keys, mode="append")
+        _assert_readers_refuse(spark, path, keys)
+        assert rebuild_table_sketches(spark, path) == keys
+        _assert_exact(spark, path, keys)
+
+
+def test_partition_crash_after_every_side_effect_then_reland_stays_exact(
+    spark, tmp_path, monkeypatch
+):
+    """The partition writer, swept the same way: a re-land of day 1
+    killed after each side effect leaves every reader refusing; a
+    rebuild restores exact counts; and a clean re-land of that day after
+    the rebuild replaces its rows instead of counting them twice."""
+    from dwh_etl_framework_spark.sources.sinks import (
+        rebuild_table_sketches,
+        write_partition_with_sketches,
+    )
+
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").withColumn(
+        "day", (F.col("o_orderkey") % 2).cast("int")
+    )
+    days = [orders.filter(F.col("day") == d) for d in range(2)]
+    half = days[1].filter(F.col("o_orderkey") % 4 == 1)
+    key = "o_custkey"  # one key: the append sweep covers the key order
+    path = str(tmp_path / "o")
+    with monkeypatch.context() as m:
+        effects = _crash_after(m, 0)
+        for d in days:
+            write_partition_with_sketches(d, path, [key], ["day"])
+    assert effects == ["marker", "data", "fragment", "fragment"] * 2
+    for k in range(1, 5):
+        with monkeypatch.context() as m:
+            _crash_after(m, k)
+            with pytest.raises(_Crash):
+                write_partition_with_sketches(half, path, [key], ["day"])
+        _assert_readers_refuse(spark, path, [key, key])
+        assert rebuild_table_sketches(spark, path) == [key]
+        _assert_exact(spark, path, [key])
+        write_partition_with_sketches(days[1], path, [key], ["day"])
+        _assert_exact(spark, path, [key])
+
+
+def test_rebuild_refuses_an_unreadable_fragment_unless_given_w(spark, tmp_path):
+    """Only a missing fragment dir means "no landed width": a corrupt
+    fragment must not silently rebuild a w=64 table at the default
+    width. An explicit w repairs it."""
+    from dwh_etl_framework_spark.operators.sketch import cms_cardinality
+    from dwh_etl_framework_spark.sources.sinks import (
+        SKETCH_DIR,
+        read_table_sketch,
+        rebuild_table_sketches,
+        write_table_with_sketches,
+    )
+
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    path = str(tmp_path / "o")
+    write_table_with_sketches(orders, path, ["o_custkey"], mode="overwrite", w=64)
+    frag_dir = tmp_path / "o" / SKETCH_DIR / "o_custkey"
+    (frag := next(frag_dir.glob("part-*.parquet"))).write_bytes(b"not parquet")
+    for crc in frag_dir.glob(".*.crc"):
+        crc.unlink()
+    with pytest.raises(Exception) as err:
+        rebuild_table_sketches(spark, path)
+    assert not isinstance(err.value, ValueError)
+    assert frag.read_bytes() == b"not parquet"
+
+    assert rebuild_table_sketches(spark, path, w=64) == ["o_custkey"]
+    merged, w = read_table_sketch(spark, path, "o_custkey")
+    assert w == 64
+    assert cms_cardinality(merged).first()["n_rows"] == orders.count()
