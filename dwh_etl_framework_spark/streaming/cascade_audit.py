@@ -48,6 +48,7 @@ from dwh_etl_framework_spark.operators.dedup import (
     minhash_signatures_portable,
     shingle_table,
 )
+from dwh_etl_framework_spark.streaming.guard import start_fold
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
 
 AUDIT_COLS = (
@@ -199,6 +200,27 @@ def update_cascade_audit(
     return all_sets, all_sigs, new_audit
 
 
+def fold_audit_batch(
+    sets_state: StreamMasterState, sigs_state: StreamMasterState,
+    audit_state: StreamMasterState, batch_df: DataFrame, text_col: str,
+    id_col: str, n: int = 3, threshold: float = 0.5, k: int = 64,
+    bands: int = 16, rows_per_band: int = 4,
+) -> None:
+    """Fold one non-empty micro-batch and publish the three states."""
+    new_sets, new_sigs, new_audit = update_cascade_audit(
+        sets_state.read(), sigs_state.read(), audit_state.read(),
+        batch_df, text_col, id_col, n=n, threshold=threshold,
+        k=k, bands=bands, rows_per_band=rows_per_band,
+    )
+    # audit LAST: its rows are derivable from (sets, sigs) + batch, so the
+    # weakest crash window (indexes advanced, audit not) is healed by the
+    # re-run's dedup; the reverse order could publish audit rows whose
+    # index entries a crash then loses.
+    sets_state.write(new_sets)
+    sigs_state.write(new_sigs)
+    audit_state.write(new_audit)
+
+
 def stream_cascade_audit(
     stream: DataFrame,
     sets_state: StreamMasterState,
@@ -217,26 +239,10 @@ def stream_cascade_audit(
     exactly the batch x97 rows over all documents ever streamed. The
     three states publish independently (each crash-atomic); every merge
     is a set-union, so any crash window re-heals on re-delivery."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        new_sets, new_sigs, new_audit = update_cascade_audit(
-            sets_state.read(), sigs_state.read(), audit_state.read(),
-            batch_df, text_col, id_col, n=n, threshold=threshold,
-            k=k, bands=bands, rows_per_band=rows_per_band,
-        )
-        # audit LAST: its rows are derivable from (sets, sigs) + batch,
-        # so the weakest crash window (indexes advanced, audit not) is
-        # healed by the re-run's dedup; the reverse order could publish
-        # audit rows whose index entries a crash then loses.
-        sets_state.write(new_sets)
-        sigs_state.write(new_sigs)
-        audit_state.write(new_audit)
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold(
+        stream, checkpoint_dir,
+        lambda b, _: fold_audit_batch(
+            sets_state, sigs_state, audit_state, b, text_col, id_col,
+            n, threshold, k, bands, rows_per_band,
+        ),
     )

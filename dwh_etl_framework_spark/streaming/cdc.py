@@ -25,6 +25,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dwh_etl_framework_spark.streaming.guard import start_fold
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
 
 #: op-column values, Debezium-shaped
@@ -126,6 +127,22 @@ def apply_cdc_batch(
     return survivors.unionByName(upserts)
 
 
+def fold_cdc_batch(
+    state: StreamMasterState, batch_df: DataFrame, key_cols: Sequence[str],
+    order_cols: Sequence[str], op_col: str = "op",
+) -> None:
+    """Apply one non-empty micro-batch of change events to the durable
+    master. The bootstrapped master schema DELIBERATELY retains the
+    ``order_cols`` (everything but the op column): each master row
+    remembers the ordering tuple of the change that produced it, which is
+    what lets ``apply_cdc_batch`` reject out-of-order deliveries that span
+    micro-batches (see its cross-batch ordering guard)."""
+    master = state.read()
+    if master is None:
+        master = batch_df.drop(op_col).limit(0)
+    state.write(apply_cdc_batch(master, batch_df, key_cols, order_cols, op_col))
+
+
 def stream_cdc_to_master(
     change_stream: DataFrame,
     state: StreamMasterState,
@@ -137,29 +154,11 @@ def stream_cdc_to_master(
     """Continuous CDC apply: each micro-batch of change events is collapsed
 
     and applied to the durable master (disk-backed ``StreamMasterState`` —
-    resumes correctly after restart, like the journal stream merge).
-    Returns the StreamingQuery; caller awaits/stops it.
-
-    The bootstrapped master schema DELIBERATELY retains the ``order_cols``
-    (everything but the op column): each master row remembers the ordering
-    tuple of the change that produced it, which is what lets
-    ``apply_cdc_batch`` reject out-of-order deliveries that span
-    micro-batches (see its cross-batch ordering guard)."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        master = state.read()
-        if master is None:
-            master = batch_df.drop(op_col).limit(0)
-        state.write(
-            apply_cdc_batch(master, batch_df, key_cols, order_cols, op_col)
-        )
-
-    return (
-        change_stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
+    resumes correctly after restart, like the journal stream merge) by
+    :func:`fold_cdc_batch`. Returns the StreamingQuery; caller
+    awaits/stops it."""
+    return start_fold(
+        change_stream, checkpoint_dir,
+        lambda b, _: fold_cdc_batch(state, b, key_cols, order_cols, op_col),
+        output_mode="update",
     )

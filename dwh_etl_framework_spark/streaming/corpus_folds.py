@@ -16,10 +16,8 @@ on itself (≤ n survivors) and the fold ranks ≤ 2n rows. Set-merge ⇒
 re-delivery idempotent for free, like the quota fold.
 
 **Boilerplate document frequencies** (x96): per-(source, shingle) df
-counters merge by SUM, which is NOT idempotent — the fold uses the same
-run-scoped batch-id guard as ``fold_histogram_batch`` (guard columns
-ride in the same atomically-published state version, so guard and
-counters can never diverge through a crash). Correctness assumes the
+counters merge by SUM, which is NOT idempotent — the fold is guarded
+(``streaming/guard.py``, "Guarded publish"). Correctness assumes the
 append-only corpus model x96 itself assumes: a doc_id arrives in
 exactly one batch (documents are immutable corpus rows, not updates).
 The report (top-5 per source, df ratio, template flag) is computed
@@ -37,8 +35,12 @@ from pyspark.sql.window import Window
 
 from dwh_etl_framework_spark.operators.dedup import shingle_table
 from dwh_etl_framework_spark.operators.sampling import weighted_sample
+from dwh_etl_framework_spark.streaming.guard import (
+    guarded_fold,
+    read_state,
+    start_fold,
+)
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
-from dwh_etl_framework_spark.streaming.guard import check_batch_guard, stamp_guard
 
 
 # ---- streaming exact-quota sample (x95 fold) ---------------------------
@@ -75,6 +77,17 @@ def update_quota(
     )
 
 
+def fold_quota_batch(
+    state: StreamMasterState, batch_df: DataFrame, strata_cols: list[str],
+    id_col: str, n_per_stratum: int, salt: str = "quota:",
+) -> None:
+    """Fold one non-empty micro-batch into the persisted reservoir."""
+    merged = update_quota(
+        state.read(), batch_df, strata_cols, id_col, n_per_stratum, salt
+    )
+    state.write(merged.coalesce(1))  # ≤ n rows per stratum
+
+
 def stream_quota_sample(
     stream: DataFrame,
     state: StreamMasterState,
@@ -87,20 +100,11 @@ def stream_quota_sample(
     """Maintain the exact-quota sample continuously; the state table IS
     the sample (with ``rk``), identical to the batch x95 result over all
     rows ever streamed. Returns the StreamingQuery."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        merged = update_quota(
-            state.read(), batch_df, strata_cols, id_col, n_per_stratum, salt
-        )
-        state.write(merged.coalesce(1))  # ≤ n rows per stratum
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold(
+        stream, checkpoint_dir,
+        lambda b, _: fold_quota_batch(
+            state, b, strata_cols, id_col, n_per_stratum, salt
+        ),
     )
 
 
@@ -142,6 +146,15 @@ def update_weighted(
     )
 
 
+def fold_weighted_batch(
+    state: StreamMasterState, batch_df: DataFrame, id_col: str,
+    weight_col: str, n: int, salt: str = "wsample:",
+) -> None:
+    """Fold one non-empty micro-batch into the persisted reservoir."""
+    merged = update_weighted(state.read(), batch_df, id_col, weight_col, n, salt)
+    state.write(merged.coalesce(1))  # ≤ n rows
+
+
 def stream_weighted_sample(
     stream: DataFrame,
     state: StreamMasterState,
@@ -155,20 +168,9 @@ def stream_weighted_sample(
     table IS the sample (with ``wkey`` and ``rk``), identical to the
     batch x98 result over all rows ever streamed. Returns the
     StreamingQuery."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        merged = update_weighted(
-            state.read(), batch_df, id_col, weight_col, n, salt
-        )
-        state.write(merged.coalesce(1))  # ≤ n rows
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold(
+        stream, checkpoint_dir,
+        lambda b, _: fold_weighted_batch(state, b, id_col, weight_col, n, salt),
     )
 
 
@@ -233,18 +235,15 @@ def fold_dfreq_batch(
     n: int = 3,
     run_id: str = "",
 ) -> bool:
-    """Apply one micro-batch exactly once (the fold_histogram_batch
-    guard verbatim: run-scoped batch-id rides in the same atomically
-    published state version as the counters). Returns False on a skipped
-    re-execution."""
-    if not batch_df.head(1):
-        return False
-    skip, counts = check_batch_guard(state.read(), batch_id, run_id)
-    if skip:
-        return False
-    merged = update_dfreq(counts, batch_df, text_col, id_col, source_col, n)
-    state.write(stamp_guard(merged, batch_id, run_id).coalesce(1))
-    return True
+    """Apply one micro-batch exactly once
+    (:func:`~dwh_etl_framework_spark.streaming.guard.guarded_fold`).
+    Returns False for an empty batch or a skipped re-execution."""
+    return guarded_fold(
+        state, batch_df, batch_id, run_id,
+        lambda counts: update_dfreq(
+            counts, batch_df, text_col, id_col, source_col, n
+        ),
+    )
 
 
 def stream_dfreq(
@@ -257,18 +256,12 @@ def stream_dfreq(
     n: int = 3,
 ):
     """Maintain the (source, shingle) df counter table continuously."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        fold_dfreq_batch(
-            state, batch_df, batch_id, text_col, id_col, source_col, n,
-            run_id=checkpoint_dir,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold(
+        stream, checkpoint_dir,
+        lambda b, i, run: fold_dfreq_batch(
+            state, b, i, text_col, id_col, source_col, n, run
+        ),
+        run_scoped=True,
     )
 
 
@@ -282,11 +275,9 @@ def current_boilerplate(
     most document-frequent shingles per source with df ratio and the
     template flag. Runs entirely over the vocabulary-sized state (None
     before the first batch lands). Matches x96's output contract."""
-    stored = state.read()
-    if stored is None:
+    counts = read_state(state)
+    if counts is None:
         return None
-    drop = [c for c in ("__last_batch_id", "__run_id") if c in stored.columns]
-    counts = stored.drop(*drop) if drop else stored
     nd = counts.filter(F.col("shingle").isNull()).select(
         source_col, F.col("cnt").alias("n_docs")
     )
@@ -330,6 +321,18 @@ def update_phrase_postings(
     return contrib.dropDuplicates(["doc_id", "i", "term"])
 
 
+def fold_phrase_batch(
+    state: StreamMasterState, batch_df: DataFrame, text_col: str,
+    id_col: str, phrases: list[tuple[int, str]],
+) -> None:
+    """Fold one non-empty micro-batch's postings into the persisted index."""
+    state.write(
+        update_phrase_postings(
+            state.read(), batch_df, text_col, id_col, phrases
+        ).coalesce(1)
+    )
+
+
 def stream_phrase_index(
     stream: DataFrame,
     state: StreamMasterState,
@@ -342,21 +345,9 @@ def stream_phrase_index(
     x102 match plan against the state at any time (the index-once/
     query-many retrieval shape, incrementally). Returns the
     StreamingQuery."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        state.write(
-            update_phrase_postings(
-                state.read(), batch_df, text_col, id_col, phrases
-            ).coalesce(1)
-        )
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold(
+        stream, checkpoint_dir,
+        lambda b, _: fold_phrase_batch(state, b, text_col, id_col, phrases),
     )
 
 
@@ -369,6 +360,4 @@ def current_phrase_matches(
     from dwh_etl_framework_spark.queries.wave16 import phrase_matches
 
     stored = state.read()
-    if stored is None:
-        return None
-    return phrase_matches(stored, phrases)
+    return None if stored is None else phrase_matches(stored, phrases)

@@ -24,14 +24,19 @@ stored registers.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from dwh_etl_framework_spark.operators.sketch import (
     hll_estimate,
     hll_merge,
     hll_registers,
 )
+from dwh_etl_framework_spark.streaming.guard import (
+    guarded_fold,
+    read_state,
+    start_fold,
+)
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
-from dwh_etl_framework_spark.streaming.guard import check_batch_guard, stamp_guard
 
 
 def update_registers(
@@ -50,6 +55,16 @@ def update_registers(
     return hll_merge(state_regs, batch_regs)
 
 
+def fold_registers_batch(
+    state: StreamMasterState, batch_df: DataFrame, group_cols: list[str],
+    value_expr: str,
+) -> None:
+    """MAX-merge one non-empty micro-batch's registers into the state
+    (register tables are tiny, ≤ m rows/group: one-file write)."""
+    merged = update_registers(state.read(), batch_df, group_cols, value_expr)
+    state.write(merged.coalesce(1))
+
+
 def stream_distinct_count(
     stream: DataFrame,
     state: StreamMasterState,
@@ -62,21 +77,9 @@ def stream_distinct_count(
     table at ``state``. Readers call :func:`current_estimate` at any time
     for the live approximate distinct counts. Returns the StreamingQuery;
     caller awaits/stops it."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        merged = update_registers(
-            state.read(), batch_df, group_cols, value_expr
-        )
-        # register tables are tiny (≤ m rows/group): coalesce the write
-        state.write(merged.coalesce(1))
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold(
+        stream, checkpoint_dir,
+        lambda b, _: fold_registers_batch(state, b, group_cols, value_expr),
     )
 
 
@@ -86,23 +89,13 @@ def current_estimate(
     """The live estimate from the persisted registers (None before the
     first batch lands)."""
     regs = state.read()
-    if regs is None:
-        return None
-    return hll_estimate(regs, group_cols)
+    return None if regs is None else hll_estimate(regs, group_cols)
 
 
 # ---- streaming mergeable histogram (the x88 counter table) -------------
-# Same state discipline as the HLL registers above, but the merge is SUM:
-# each micro-batch's (group, bucket, cnt) histogram adds into the persisted
-# table. Bounded state (≤ buckets rows per group), idempotence does NOT
-# come free here (SUM is not idempotent the way MAX is). The stream
-# checkpoint covers clean resume only — foreachBatch is at-least-once, so
-# a crash AFTER state.write but BEFORE the checkpoint offset commit
-# re-executes that batch on restart (ADVICE r6). The standard guard: the
-# last applied batch_id is persisted IN the state table (same parquet
-# overwrite, so guard and counters can never diverge) and a fold whose
-# batch_id ≤ stored is a no-op. The MAX-merged HLL path above needs none
-# of this — re-applying a MAX is a fixed point.
+# Same state discipline as the HLL registers above, but the merge is SUM,
+# which is not idempotent: the fold is guarded (``streaming/guard.py``,
+# "Guarded publish"). Bounded state: ≤ buckets rows per group.
 
 
 def histogram_of(
@@ -110,8 +103,6 @@ def histogram_of(
 ) -> DataFrame:
     """One partial+final (group, bucket) aggregate — the batch building
     block shared by the batch path (x88) and the stream fold."""
-    from pyspark.sql import functions as F
-
     return df.selectExpr(*group_cols, f"{bucket_expr} AS bucket").groupBy(
         *group_cols, "bucket"
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -124,8 +115,6 @@ def update_histogram(
     bucket_expr: str,
 ) -> DataFrame:
     """Fold one batch into the histogram state (pure function, twin rule)."""
-    from pyspark.sql import functions as F
-
     batch_hist = histogram_of(batch, group_cols, bucket_expr)
     if state_hist is None:
         return batch_hist
@@ -144,43 +133,19 @@ def fold_histogram_batch(
     bucket_expr: str,
     run_id: str = "",
 ) -> bool:
-    """Apply one micro-batch to the persisted histogram, exactly once.
-
-    Returns True if the batch was folded, False if it was skipped as a
-    re-execution (its batch_id was already recorded in the state). The
-    guard columns ride in the same state version as the counters, and
-    ``StreamMasterState.write`` publishes each version atomically
-    (pointer-file commit protocol — a crash mid-write leaves the previous
-    version live), so guard and counters stay consistent through any
-    crash: either both reflect the batch or neither does.
-
-    ``run_id`` scopes the batch_id (the Delta-style (appId, version)
-    transaction pattern): foreachBatch batch_ids restart at 0 whenever
-    the stream gets a FRESH checkpoint, so comparing ids across
-    checkpoint generations is meaningless — a new run_id accepts the
-    incoming batch regardless of the stored id and re-stamps the state.
-    ``stream_histogram`` passes its checkpoint dir as the run identity.
-    """
-    from pyspark.sql import functions as F
-
-    if not batch_df.head(1):
-        return False
-    skip, hist_state = check_batch_guard(state.read(), batch_id, run_id)
-    if skip:
-        return False  # at-least-once re-execution — already applied
-    merged = update_histogram(hist_state, batch_df, group_cols, bucket_expr)
-    state.write(stamp_guard(merged, batch_id, run_id).coalesce(1))
-    return True
+    """Apply one micro-batch to the persisted histogram, exactly once
+    (:func:`~dwh_etl_framework_spark.streaming.guard.guarded_fold`).
+    Returns False for an empty batch or a skipped re-execution."""
+    return guarded_fold(
+        state, batch_df, batch_id, run_id,
+        lambda hist: update_histogram(hist, batch_df, group_cols, bucket_expr),
+    )
 
 
 def current_histogram(state: StreamMasterState) -> DataFrame | None:
-    """The live counter table without the batch-id guard column (None
+    """The live counter table without the batch-id guard columns (None
     before the first batch lands)."""
-    stored = state.read()
-    if stored is None:
-        return None
-    drop = [c for c in ("__last_batch_id", "__run_id") if c in stored.columns]
-    return stored.drop(*drop) if drop else stored
+    return read_state(state)
 
 
 def stream_histogram(
@@ -193,18 +158,12 @@ def stream_histogram(
     """Maintain the per-group histogram continuously; quantile reads
     against the state table use the x88 integer rank arithmetic at any
     time without touching raw history."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        fold_histogram_batch(
-            state, batch_df, batch_id, group_cols, bucket_expr,
-            run_id=checkpoint_dir,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold(
+        stream, checkpoint_dir,
+        lambda b, i, run: fold_histogram_batch(
+            state, b, i, group_cols, bucket_expr, run
+        ),
+        run_scoped=True,
     )
 
 
@@ -232,8 +191,6 @@ def update_cms(
     the caller's head. Folding a contribution at a different explicit
     ``w`` than the state was built with raises instead of silently
     producing counters that never align."""
-    from pyspark.sql import functions as F
-
     from dwh_etl_framework_spark.operators.sketch import CMS_W, cms_sketch
 
     stored_w = None
@@ -278,33 +235,23 @@ def fold_cms_batch(
     run_id: str = "",
 ) -> bool:
     """Apply one micro-batch to the persisted sketch, exactly once
-    (the fold_histogram_batch guard verbatim — SUM counters need it).
-    Returns False on a skipped re-execution."""
-    from pyspark.sql import functions as F
-
-    if not batch_df.head(1):
-        return False
-    skip, counters = check_batch_guard(state.read(), batch_id, run_id)
-    if skip:
-        return False
-    merged = update_cms(counters, batch_df, value_expr, w)
-    state.write(stamp_guard(merged, batch_id, run_id).coalesce(1))
-    return True
+    (:func:`~dwh_etl_framework_spark.streaming.guard.guarded_fold`).
+    Returns False for an empty batch or a skipped re-execution."""
+    return guarded_fold(
+        state, batch_df, batch_id, run_id,
+        lambda counters: update_cms(counters, batch_df, value_expr, w),
+    )
 
 
 def current_cms(state: StreamMasterState) -> DataFrame | None:
     """The live (r, col, cnt) counter table without guard/width columns."""
     sk = current_histogram(state)
-    if sk is None:
-        return None
-    return sk.drop("__cms_w") if "__cms_w" in sk.columns else sk
+    return None if sk is None else sk.drop("__cms_w")
 
 
 def cms_state_width(state: StreamMasterState) -> int | None:
     """The width the persisted sketch was built at (``None`` for state
     written before widths were persisted, or before the first batch)."""
-    from pyspark.sql import functions as F
-
     stored = state.read()
     if stored is None or "__cms_w" not in stored.columns:
         return None
@@ -321,15 +268,8 @@ def stream_cms(
     """Maintain the count-min sketch continuously; point estimates
     (operators/sketch.cms_estimate) and join-size inner products (x103)
     read the state table at any time without touching raw history."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        fold_cms_batch(
-            state, batch_df, batch_id, value_expr, w, run_id=checkpoint_dir
-        )
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold(
+        stream, checkpoint_dir,
+        lambda b, i, run: fold_cms_batch(state, b, i, value_expr, w, run),
+        run_scoped=True,
     )

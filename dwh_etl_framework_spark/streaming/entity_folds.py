@@ -7,7 +7,7 @@ that stays VOCABULARY-sized no matter how many rows arrive — the
 100 TB property the batch plan's tiers already have:
 
 - **value stats** — one row per distinct value: row count (SUM-merged,
-  run-scoped batch-id guard — the ``fold_dfreq_batch`` discipline),
+  guarded: ``streaming/guard.py``, "Guarded publish"),
   stable node id ``vid`` = MIN key over every row carrying the value
   (MIN is idempotent and order-free, so the streamed vid converges to
   the batch pipeline's global min regardless of arrival order), and
@@ -38,8 +38,12 @@ from pyspark.sql import functions as F
 
 from dwh_etl_framework_spark.operators.editjoin import edit_distance_pairs_cross
 from dwh_etl_framework_spark.operators.graph import dedup_clusters
+from dwh_etl_framework_spark.streaming.guard import (
+    guarded_fold,
+    read_state,
+    start_fold,
+)
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
-from dwh_etl_framework_spark.streaming.guard import check_batch_guard, stamp_guard
 
 
 def batch_value_stats(
@@ -93,48 +97,41 @@ def fold_entity_batch(
     k: int = 1,
     run_id: str = "",
 ) -> bool:
-    """Apply one micro-batch exactly once. Returns False on a skipped
-    re-execution (run-scoped batch-id guard, carried by the stats
-    state; the edge write is idempotent so it needs no guard and runs
-    first — see the module crash-discipline note)."""
-    if not batch_df.head(1):
-        return False
-    skip, stats = check_batch_guard(stats_state.read(), batch_id, run_id)
-    if skip:
-        return False
+    """Apply one micro-batch exactly once
+    (:func:`~dwh_etl_framework_spark.streaming.guard.guarded_fold`, guard
+    carried by the stats state). Returns False for an empty batch or a
+    skipped re-execution. The update publishes the edges first: their
+    write is idempotent, so it needs no guard (see the module
+    crash-discipline note)."""
 
-    # ---- edges first (idempotent set-union) ----
-    batch_vals = (
-        batch_df.filter(F.col(val_col).isNotNull())
-        .select(F.col(val_col).alias("val"))
-        .distinct()
-    )
-    known_vals = (
-        stats.select("val") if stats is not None else None
-    )
-    all_vals = (
-        batch_vals if known_vals is None
-        else known_vals.unionByName(batch_vals).distinct()
-    )
-    new_vals = (
-        batch_vals if known_vals is None
-        else batch_vals.join(known_vals, "val", "left_anti")
-    )
-    new_edges = edit_distance_pairs_cross(
-        new_vals, all_vals, "val", "val", k=k
-    ).select(F.col("id_a").alias("val_a"), F.col("id_b").alias("val_b"))
-    old_edges = edges_state.read()
-    merged_edges = (
-        new_edges if old_edges is None
-        else old_edges.unionByName(new_edges)
-    ).dropDuplicates(["val_a", "val_b"])
-    edges_state.write(merged_edges.coalesce(1))
+    def update(stats: DataFrame | None) -> DataFrame:
+        # ---- edges first (idempotent set-union) ----
+        batch_vals = (
+            batch_df.filter(F.col(val_col).isNotNull())
+            .select(F.col(val_col).alias("val"))
+            .distinct()
+        )
+        if stats is None:
+            all_vals = new_vals = batch_vals
+        else:
+            known_vals = stats.select("val")
+            all_vals = known_vals.unionByName(batch_vals).distinct()
+            new_vals = batch_vals.join(known_vals, "val", "left_anti")
+        new_edges = edit_distance_pairs_cross(
+            new_vals, all_vals, "val", "val", k=k
+        ).select(F.col("id_a").alias("val_a"), F.col("id_b").alias("val_b"))
+        old_edges = edges_state.read()
+        merged_edges = (
+            new_edges if old_edges is None
+            else old_edges.unionByName(new_edges)
+        ).dropDuplicates(["val_a", "val_b"])
+        edges_state.write(merged_edges.coalesce(1))
 
-    # ---- stats second (guarded SUM/MIN/MAX merge) ----
-    contrib = batch_value_stats(batch_df, val_col, key_col, price_col)
-    merged = update_value_stats(stats, contrib)
-    stats_state.write(stamp_guard(merged, batch_id, run_id).coalesce(1))
-    return True
+        # ---- stats second (guarded SUM/MIN/MAX merge) ----
+        contrib = batch_value_stats(batch_df, val_col, key_col, price_col)
+        return update_value_stats(stats, contrib)
+
+    return guarded_fold(stats_state, batch_df, batch_id, run_id, update)
 
 
 def stream_entity_resolution(
@@ -149,18 +146,12 @@ def stream_entity_resolution(
 ):
     """Maintain the vocabulary-sized entity-resolution state
     continuously. Returns the StreamingQuery."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        fold_entity_batch(
-            stats_state, edges_state, batch_df, batch_id,
-            val_col, key_col, price_col, k, run_id=checkpoint_dir,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold(
+        stream, checkpoint_dir,
+        lambda b, i, run: fold_entity_batch(
+            stats_state, edges_state, b, i, val_col, key_col, price_col, k, run
+        ),
+        run_scoped=True,
     )
 
 
@@ -173,11 +164,9 @@ def current_entities(
     batch x101 result projected to entity grain over all rows ever
     streamed. Connected components + one aggregate, all over
     vocabulary-sized tables; None before the first batch lands."""
-    stored = stats_state.read()
-    if stored is None:
+    stats = read_state(stats_state)
+    if stats is None:
         return None
-    drop = [c for c in ("__last_batch_id", "__run_id") if c in stored.columns]
-    stats = stored.drop(*drop) if drop else stored
     edges = edges_state.read()
     vid_of = stats.select("val", "vid")
     if edges is None:

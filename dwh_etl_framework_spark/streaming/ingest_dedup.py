@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dwh_etl_framework_spark.operators import dedup
+from dwh_etl_framework_spark.streaming.guard import start_fold
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
 
 
@@ -101,6 +102,18 @@ def screen_batch(
     return batch.join(near, id_c, "left_anti")
 
 
+def fold_ingest_batch(
+    state: StreamMasterState, batch_df: DataFrame, cfg: DedupIngestConfig
+) -> None:
+    """Append one non-empty micro-batch's screened survivors to the
+    corpus."""
+    corpus = state.read()
+    survivors = screen_batch(corpus, batch_df, cfg)
+    state.write(
+        corpus.unionByName(survivors) if corpus is not None else survivors
+    )
+
+
 def stream_ingest_dedup(
     doc_stream: DataFrame,
     state: StreamMasterState,
@@ -109,22 +122,9 @@ def stream_ingest_dedup(
 ):
     """Start a foreachBatch query appending screened survivors to the
 
-    corpus. Returns the StreamingQuery; caller awaits/stops it."""
+    corpus (:func:`fold_ingest_batch`). Returns the StreamingQuery;
+    caller awaits/stops it."""
     cfg = cfg or DedupIngestConfig()
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        corpus = state.read()
-        survivors = screen_batch(corpus, batch_df, cfg)
-        merged = (
-            corpus.unionByName(survivors) if corpus is not None else survivors
-        )
-        state.write(merged)
-
-    return (
-        doc_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold(
+        doc_stream, checkpoint_dir, lambda b, _: fold_ingest_batch(state, b, cfg)
     )

@@ -22,6 +22,7 @@ from dwh_etl_framework_spark.operators.merge import (
     merge_delta,
     stamp_journal_columns,
 )
+from dwh_etl_framework_spark.streaming.guard import start_fold
 
 
 class StreamMasterState:
@@ -162,6 +163,27 @@ class StreamMasterState:
                     pass
 
 
+def fold_merge_batch(
+    state: StreamMasterState, batch_df: DataFrame, spec: JournalSpec,
+    transform_dt=None,
+) -> None:
+    """Upsert one non-empty micro-batch of journal rows into the master.
+
+    No seqno stride: monotonically_increasing_id's partition bits (≥33)
+    would alias any stride anyway, and cross-batch ordering is irrelevant
+    here — each batch upserts sequentially into master. Within a batch,
+    duplicate-PK rows are ordered by ``__transform_dt``; supply per-row
+    event time in the stream (as the tests do) for a meaningful
+    within-batch winner."""
+    stamped = stamp_journal_columns(batch_df, transform_dt)
+    master = state.read()
+    if master is None:
+        master = stamped.limit(0).drop(
+            "__transform_dt", "__load_dt", "__seqno", "__record_state"
+        )
+    state.write(merge_delta(master, stamped, spec))
+
+
 def stream_merge_to_master(
     journal_stream: DataFrame,
     spec: JournalSpec,
@@ -169,31 +191,12 @@ def stream_merge_to_master(
     checkpoint_dir: str,
     transform_dt=None,
 ):
-    """Start a foreachBatch query upserting each micro-batch into master.
+    """Start a foreachBatch query upserting each micro-batch into master
+    (:func:`fold_merge_batch`; protocol: ``streaming/guard.py``).
 
     Returns the StreamingQuery; caller awaits/stops it."""
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        # No seqno stride: monotonically_increasing_id's partition bits
-        # (≥33) would alias any stride anyway, and cross-batch ordering is
-        # irrelevant here — each batch upserts sequentially into master.
-        # Within a batch, duplicate-PK rows are ordered by __transform_dt;
-        # supply per-row event time in the stream (as the tests do) for a
-        # meaningful within-batch winner.
-        stamped = stamp_journal_columns(batch_df, transform_dt)
-        master = state.read()
-        if master is None:
-            master = stamped.limit(0).drop(
-                "__transform_dt", "__load_dt", "__seqno", "__record_state"
-            )
-        state.write(merge_delta(master, stamped, spec))
-
-    return (
-        journal_stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold(
+        journal_stream, checkpoint_dir,
+        lambda b, _: fold_merge_batch(state, b, spec, transform_dt),
+        output_mode="update",
     )

@@ -45,6 +45,7 @@ from dwh_etl_framework_spark.operators.merge import (
     change_feed_from_intervals,
     scd2_intervals,
 )
+from dwh_etl_framework_spark.streaming.guard import start_fold
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
 
 #: ordering columns the state retains per version (``__record_state`` is
@@ -62,8 +63,7 @@ def _normalize_batch(batch_df: DataFrame) -> DataFrame:
             f"SCD2 fold needs journal ordering columns; missing {missing} "
             "— stamp the stream (stamp_journal_columns) before folding"
         )
-    drop = [c for c in batch_df.columns if c in ("__record_state",)]
-    return batch_df.drop(*drop) if drop else batch_df
+    return batch_df.drop("__record_state")
 
 
 def fold_scd2_batch(
@@ -119,10 +119,7 @@ def current_scd2(state: StreamMasterState) -> DataFrame | None:
     ``operators.merge.pit_join`` for point-in-time reads — the f33 plan
     over streamed intervals."""
     stored = state.read()
-    if stored is None:
-        return None
-    drop = [c for c in SYSTEM_COLS if c in stored.columns]
-    return stored.drop(*drop) if drop else stored
+    return None if stored is None else stored.drop(*SYSTEM_COLS)
 
 
 def change_feed_from_state(
@@ -287,47 +284,6 @@ def resolve_stamp_base(spark, state: StreamMasterState, meta: StreamMasterState,
     return base
 
 
-def _generation_id(spark, checkpoint_dir: str) -> str:
-    """The stamp-generation identity of one checkpoint LIFETIME, persisted
-    INSIDE the checkpoint dir (``<dir>/_stamp_generation``), minted on
-    first use (ADVICE r11, medium).
-
-    Keying generations on the checkpoint *path* was wrong: wiping and
-    reusing the same path (a common ops reset) restarts batch ids at 0
-    but would re-resolve the OLD generation's anchor, stamping new
-    versions below/colliding with the prior generation's later batches —
-    inverting SCD2 version order for replayed keys. A UUID file inside
-    the dir shares the dir's fate: wiped with it (→ fresh generation,
-    fresh anchor above everything folded), retained with it (→ replays
-    reproduce their original stamps byte-identically).
-
-    Upgrade note: meta rows persisted by older builds are keyed by the
-    path string; the first post-upgrade run mints a new generation whose
-    anchor clears the old rows' max, so ordering is preserved — only a
-    batch re-delivered ACROSS the upgrade boundary stamps differently
-    (start the upgrade from a drained stream)."""
-    import uuid
-
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/_stamp_generation")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p):
-        stream = fs.open(p)
-        try:
-            return str(
-                jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-            ).strip()
-        finally:
-            stream.close()
-    gen = uuid.uuid4().hex
-    out = fs.create(p, False)  # no-overwrite: a concurrent creator wins
-    try:
-        out.write(bytearray(gen, "ascii"))
-    finally:
-        out.close()
-    return gen
-
-
 def stream_scd2(
     journal_stream: DataFrame,
     spec: JournalSpec,
@@ -337,41 +293,30 @@ def stream_scd2(
     tombstones: StreamMasterState | None = None,
 ):
     """Start the availableNow foreachBatch query maintaining the SCD2
-    state. Streams that already carry the journal ordering columns are
-    folded as-is (event-time versioning); otherwise rows are stamped
-    deterministically from (generation anchor, batch_id, row content) —
-    see :func:`stamp_batch_deterministic` / :func:`resolve_stamp_base` —
-    so at-least-once re-delivery produces byte-identical dedup keys even
-    on the stamped path, and a fresh checkpoint or legacy wall-clock
-    state never inverts version order."""
+    state (protocol: ``streaming/guard.py``). Streams that already carry
+    the journal ordering columns are folded as-is (event-time
+    versioning); otherwise rows are stamped deterministically from
+    (generation anchor, batch_id, row content) — see
+    :func:`stamp_batch_deterministic` / :func:`resolve_stamp_base` — so
+    at-least-once re-delivery produces byte-identical dedup keys even on
+    the stamped path, and a fresh checkpoint or legacy wall-clock state
+    never inverts version order."""
     meta = StreamMasterState(state.spark, f"{state.path}__stampmeta")
     anchor: list = []  # memoized: constant for the whole run (one meta
     # read instead of one per micro-batch, review r11)
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if all(c in batch_df.columns for c in ORDER_COLS):
-            stamped = batch_df
-        else:
+    def apply(batch_df: DataFrame, batch_id: int, run_id: str) -> None:
+        if not all(c in batch_df.columns for c in ORDER_COLS):
             if not anchor:
-                # generation id read lazily at first-batch time: the
-                # checkpoint dir exists once the query is running, and a
-                # wiped-then-reused path mints a FRESH id here instead of
-                # resurrecting the old anchor (ADVICE r11)
                 anchor.append(
-                    resolve_stamp_base(
-                        state.spark, state, meta,
-                        run_id=_generation_id(state.spark, checkpoint_dir),
-                    )
+                    resolve_stamp_base(state.spark, state, meta, run_id=run_id)
                 )
-            stamped = stamp_batch_deterministic(
+            batch_df = stamp_batch_deterministic(
                 batch_df, transform_dt, batch_id, base=anchor[0]
             )
-        fold_scd2_batch(state, stamped, spec, tombstones=tombstones)
+        fold_scd2_batch(state, batch_df, spec, tombstones=tombstones)
 
-    return (
-        journal_stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(apply)
-        .trigger(availableNow=True)
-        .start()
+    return start_fold(
+        journal_stream, checkpoint_dir, apply, output_mode="update",
+        run_scoped=True,
     )

@@ -45,6 +45,7 @@ from dwh_etl_framework_spark.operators.sketch import choose_join_strategy
 from dwh_etl_framework_spark.session import SessionFactory
 from dwh_etl_framework_spark.sources.pysource import DuckDBStreamSource
 from dwh_etl_framework_spark.streaming.distinct import current_cms, fold_cms_batch
+from dwh_etl_framework_spark.streaming.guard import start_fold
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
 from dwh_etl_framework_spark.streaming.scd2 import (
     change_feed_from_state,
@@ -84,31 +85,31 @@ def _write_day(spark, day: int, n_keys: int, src: Path) -> None:
 
 def _run_feed(spark, src_glob: str, ckpt: str, scd2, cms) -> int:
     """One availableNow pass of the cursor stream: fold SCD2 intervals
-    AND the planner's CMS sketch from the same batches."""
+    AND the planner's CMS sketch from the same batches. Run-scoped: the
+    CMS guard is keyed on the checkpoint's generation id."""
     n_batches = 0
 
-    def fold(batch_df, batch_id):
+    def fold(batch_df, batch_id, run_id):
         nonlocal n_batches
         if fold_scd2_batch(scd2, batch_df, SPEC):
             n_batches += 1
         fold_cms_batch(
             cms, batch_df.select("account_id"), batch_id, "account_id",
-            run_id=ckpt,
+            run_id=run_id,
         )
 
-    q = (
+    stream = (
         spark.readStream.format("duckdb_stream")
         .option("query", f"SELECT * FROM '{src_glob}'")
         .option("cursor_col", "__seqno")
         .option("partitions", "4")       # executor-parallel range reads:
         .option("partition_col", "account_id")  # the backfill shape
         .load()
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(180)
+    q = start_fold(stream, ckpt, fold, run_scoped=True)
+    if not q.awaitTermination(180):
+        q.stop()
+        raise TimeoutError(f"feed {ckpt} still running after 180 s")
     return n_batches
 
 

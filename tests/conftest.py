@@ -14,6 +14,15 @@ import os
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def await_stream(q, timeout: float) -> None:
+    """Wait for an availableNow query; on a timeout stop it and fail the
+    test, so no assertion runs against partial state and the query does
+    not keep writing into later tests."""
+    if not q.awaitTermination(timeout):
+        q.stop()
+        pytest.fail(f"streaming query {q.id} still running after {timeout} s")
+
+
 def load_events(spark, sf_dir: str = SF_DIR):
     """Events fixture with ``ts`` normalized to session-TZ TimestampType,
 

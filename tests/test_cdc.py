@@ -15,6 +15,8 @@ from dwh_etl_framework_spark.streaming.cdc import (
 )
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
 
+from conftest import await_stream
+
 
 def _master(spark, rows):
     return spark.createDataFrame(rows, "k long, v string")
@@ -117,7 +119,7 @@ def test_stream_cdc_guard_survives_out_of_order_batches(spark, tmp_path):
             .parquet(str(src))
         )
         q = stream_cdc_to_master(stream, state, ["k"], ["seq"], ckpt)
-        q.awaitTermination(180)
+        await_stream(q, 180)
 
     _changes(spark, [(1, "newest", "I", 10)]).coalesce(1).write.mode(
         "append"
@@ -162,7 +164,7 @@ def test_stream_replay_equals_sequential_apply(spark, tmp_path):
     q = stream_cdc_to_master(
         stream, state, ["k"], ["seq"], str(tmp_path / "cdc_ckpt")
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
 
     got = {r.k: r.v for r in state.read().collect()}
     assert got == golden_rows
@@ -182,7 +184,7 @@ def test_stream_resume_applies_only_new_files(spark, tmp_path):
             .parquet(str(src))
         )
         q = stream_cdc_to_master(stream, state, ["k"], ["seq"], ckpt)
-        q.awaitTermination(180)
+        await_stream(q, 180)
 
     _changes(spark, [(1, "a1", "I", 1)]).coalesce(1).write.mode(
         "append"

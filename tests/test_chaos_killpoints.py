@@ -2,7 +2,9 @@
 the fold at EVERY write boundary inside EVERY micro-batch, re-deliver
 the crashed batch (foreachBatch at-least-once semantics: same batch id),
 finish the stream, and require the final state to equal the
-uninterrupted run — for cdc, ingest_dedup and entity_folds.
+uninterrupted run — for merge, cdc, ingest_dedup, entity_folds and the
+combined scd2+cms fold. Each harness calls the module's own per-batch
+fold, the one its ``stream_*`` entry point runs.
 
 The kill points enumerate every partial-commit state a crash can leave:
 k=0 (nothing published), k=1 (first state published, rest lost), …,
@@ -19,16 +21,20 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
-from dwh_etl_framework_spark.streaming.cdc import apply_cdc_batch
+from dwh_etl_framework_spark.operators.merge import JournalSpec
+from dwh_etl_framework_spark.streaming.cdc import fold_cdc_batch
 from dwh_etl_framework_spark.streaming.entity_folds import (
     current_entities,
     fold_entity_batch,
 )
 from dwh_etl_framework_spark.streaming.ingest_dedup import (
     DedupIngestConfig,
-    screen_batch,
+    fold_ingest_batch,
 )
-from dwh_etl_framework_spark.streaming.merge import StreamMasterState
+from dwh_etl_framework_spark.streaming.merge import (
+    StreamMasterState,
+    fold_merge_batch,
+)
 
 from conftest import SF_DIR
 
@@ -62,6 +68,33 @@ class KillingState(StreamMasterState):
 T0 = datetime(2024, 3, 1)
 
 
+def _merge_batches(spark):
+    """Journal slices with per-row event time; batch 1 re-versions keys
+    1-2, batch 2 re-versions key 1 twice (the later stamp wins)."""
+
+    def b(rows):
+        return spark.createDataFrame(
+            [(k, v, T0 + timedelta(minutes=m)) for (k, v, m) in rows],
+            "account_id long, balance double, __transform_dt timestamp",
+        )
+
+    return [
+        b([(1, 10.0, 0), (2, 20.0, 1), (3, 30.0, 2)]),
+        b([(1, 11.0, 10), (2, 21.0, 11), (4, 40.0, 12)]),
+        b([(1, 12.0, 20), (1, 13.0, 21), (5, 50.0, 22)]),
+    ]
+
+
+def _merge_fold(states, batch, batch_id):
+    fold_merge_batch(states[0], batch, JournalSpec(primary_key=("account_id",)))
+
+
+def _master_result(states):
+    return sorted(
+        (tuple(r) for r in states[0].read().collect()), key=repr
+    )
+
+
 def _cdc_batches(spark):
     def b(rows):
         return spark.createDataFrame(
@@ -82,17 +115,7 @@ def _cdc_batches(spark):
 
 
 def _cdc_fold(states, batch, batch_id):
-    state = states[0]
-    master = state.read()
-    if master is None:
-        master = batch.drop("op").limit(0)
-    state.write(apply_cdc_batch(master, batch, ["k"], ["ts", "seq"], "op"))
-
-
-def _cdc_result(states):
-    return sorted(
-        (tuple(r) for r in states[0].read().collect()), key=repr
-    )
+    fold_cdc_batch(states[0], batch, ["k"], ["ts", "seq"], "op")
 
 
 _ING_CFG = DedupIngestConfig()
@@ -115,11 +138,7 @@ def _ingest_batches(spark):
 
 
 def _ingest_fold(states, batch, batch_id):
-    state = states[0]
-    corpus = state.read()
-    survivors = screen_batch(corpus, batch, _ING_CFG)
-    merged = corpus.unionByName(survivors) if corpus is not None else survivors
-    state.write(merged)
+    fold_ingest_batch(states[0], batch, _ING_CFG)
 
 
 def _ingest_result(states):
@@ -179,7 +198,6 @@ def _scd2cms_batches(spark):
 
 
 def _scd2cms_fold(states, batch, batch_id):
-    from dwh_etl_framework_spark.operators.merge import JournalSpec
     from dwh_etl_framework_spark.streaming.distinct import fold_cms_batch
     from dwh_etl_framework_spark.streaming.scd2 import fold_scd2_batch
 
@@ -206,7 +224,8 @@ def _scd2cms_result(states):
 
 
 OPS = {
-    "cdc": (1, _cdc_batches, _cdc_fold, _cdc_result),
+    "merge": (1, _merge_batches, _merge_fold, _master_result),
+    "cdc": (1, _cdc_batches, _cdc_fold, _master_result),
     "ingest_dedup": (1, _ingest_batches, _ingest_fold, _ingest_result),
     "entity_folds": (2, _entity_batches, _entity_fold, _entity_result),
     "scd2_cms": (2, _scd2cms_batches, _scd2cms_fold, _scd2cms_result),

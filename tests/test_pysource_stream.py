@@ -10,6 +10,8 @@ from dwh_etl_framework_spark.sources.pysource import (
     _CursorStreamReader,
 )
 
+from conftest import await_stream
+
 
 @pytest.fixture(scope="module", autouse=True)
 def _register(spark):
@@ -37,7 +39,7 @@ def _run(spark, src_glob, ckpt, sink: list):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
 
 
 def test_incremental_delivery_across_restarts(spark, tmp_path):
@@ -91,7 +93,7 @@ def _run_partitioned(spark, src_glob, ckpt, sink: list, n=4, extra=None):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
 
 
 def test_partitioned_backfill_then_increment(spark, tmp_path):
@@ -166,15 +168,15 @@ def test_missing_cursor_option_fails(spark, tmp_path):
     src = tmp_path / "src3"
     _write(spark, [(1, "a")], f"{src}/f0.parquet")
     with pytest.raises(Exception, match="cursor_col"):
-        (
+        await_stream(
             spark.readStream.format("duckdb_stream")
             .option("query", f"SELECT * FROM '{src}/*.parquet/*.parquet'")
             .load()
             .writeStream.format("noop")
             .option("checkpointLocation", str(tmp_path / "ck3"))
             .trigger(availableNow=True)
-            .start()
-            .awaitTermination(60)
+            .start(),
+            60,
         )
 
 
@@ -286,7 +288,7 @@ def test_cap_rejected_on_partitioned_reader(spark, tmp_path):
         1
     ).write.mode("overwrite").parquet(f"{src}/f0.parquet")
     with pytest.raises(Exception, match="max_rows_per_trigger"):
-        (
+        await_stream(
             spark.readStream.format("duckdb_stream")
             .option("query", f"SELECT * FROM '{src}/*.parquet/*.parquet'")
             .option("cursor_col", "seq")
@@ -296,8 +298,8 @@ def test_cap_rejected_on_partitioned_reader(spark, tmp_path):
             .writeStream.format("noop")
             .option("checkpointLocation", str(tmp_path / "ck"))
             .trigger(availableNow=True)
-            .start()
-            .awaitTermination(60)
+            .start(),
+            60,
         )
 
 

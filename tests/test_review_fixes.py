@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR
+from conftest import SF_DIR, await_stream
 
 
 def test_multi_write_journal_merge_prefers_latest_write(spark):
@@ -172,7 +172,7 @@ def test_stream_asof_multi_chunk_groups(spark, tmp_path):
         q = (stream_asof_join(stream).writeStream.outputMode("append")
              .foreachBatch(cap).option("checkpointLocation", str(tmp_path / "ck"))
              .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        await_stream(q, 120)
 
         # invariant: never joined to a right update from the future
         assert got_rows and all(

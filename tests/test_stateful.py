@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from dwh_etl_framework_spark.streaming.stateful import running_totals_per_user
 from dwh_etl_framework_spark.streaming.windows import events_file_stream
 
-from conftest import load_events
+from conftest import await_stream, load_events
 
 
 def test_stateful_running_totals_matches_batch(spark, tmp_path):
@@ -34,7 +34,7 @@ def test_stateful_running_totals_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
 
     batch = {
         r.user_id: (r.n, r.total)
@@ -104,7 +104,7 @@ def test_transform_with_state_matches_batch(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        await_stream(q, 180)
     finally:
         if prev is None:
             spark.conf.unset(provider_key)

@@ -17,7 +17,7 @@ from dwh_etl_framework_spark.operators import aggmaint
 from dwh_etl_framework_spark.queries.wave8 import hourly_rollup, score_trailing
 from dwh_etl_framework_spark.streaming.windows import EVENTS_STREAM_SCHEMA
 
-from conftest import load_events
+from conftest import await_stream, load_events
 
 
 @pytest.fixture(scope="module")
@@ -60,7 +60,7 @@ def test_stream_maintained_rollup_equals_batch_scorer(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
 
     maintained = state["rollup"]
     assert maintained is not None

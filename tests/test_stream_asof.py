@@ -16,6 +16,8 @@ from dwh_etl_framework_spark.streaming.asof import (
     tag_streams,
 )
 
+from conftest import await_stream
+
 
 def _run(spark, tagged_stream, tmp_path, name):
     """foreachBatch collector: unlike the memory sink it supports resuming
@@ -31,7 +33,7 @@ def _run(spark, tagged_stream, tmp_path, name):
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
     return rows
 
 

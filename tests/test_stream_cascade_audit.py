@@ -28,7 +28,7 @@ from dwh_etl_framework_spark.streaming.cascade_audit import (
 )
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
 
-from conftest import SF_DIR
+from conftest import SF_DIR, await_stream
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -97,7 +97,7 @@ def _run(spark, src, base, ckpt):
         _doc_stream(spark, src), *states, checkpoint_dir=ckpt,
         text_col="text", id_col="doc_id",
     )
-    q.awaitTermination(300)
+    await_stream(q, 300)
     return states
 
 

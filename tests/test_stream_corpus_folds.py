@@ -32,7 +32,7 @@ from dwh_etl_framework_spark.streaming.corpus_folds import (
 )
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
 
-from conftest import SF_DIR
+from conftest import SF_DIR, await_stream
 
 DOC_SCHEMA = "doc_id long, source string, text string"
 
@@ -70,7 +70,7 @@ def _run_quota(spark, src, state_path, ckpt):
     q = stream_quota_sample(
         _doc_stream(spark, src), state, ckpt, ["source"], "doc_id", 10
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return state
 
 
@@ -134,7 +134,7 @@ def test_stream_dfreq_report_equals_batch_x96(spark, tmp_path):
         _doc_stream(spark, src), state, str(tmp_path / "ckpt"),
         "text", "doc_id", "source",
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
     live = current_boilerplate(state)
     batch = x96_boilerplate_ngrams(spark, SF_DIR)
     assert _report_dict(live) == _report_dict(batch)
@@ -213,7 +213,7 @@ def _run_weighted(spark, src, state_path, ckpt):
     q = stream_weighted_sample(
         stream, state, ckpt, "doc_id", "weight", 25, salt="ws:"
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return state
 
 
@@ -297,7 +297,7 @@ def _run_phrase_index(spark, src, state_path, ckpt):
     q = stream_phrase_index(
         _doc_stream(spark, src), state, ckpt, "text", "doc_id", PHRASES
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return state
 
 

@@ -27,7 +27,7 @@ from dwh_etl_framework_spark.streaming.distinct import (
 )
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
 
-from conftest import SF_DIR
+from conftest import SF_DIR, await_stream
 
 
 def _write_slices(spark, base_dir: str) -> None:
@@ -60,7 +60,7 @@ def _run_stream(spark, src: str, state_path: str, checkpoint: str):
     q = stream_distinct_count(
         stream, state, checkpoint, ["event_type"], "user_id"
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return state
 
 
@@ -158,7 +158,7 @@ def test_stream_histogram_equals_batch(spark, tmp_path):
             .parquet(src)
         )
         q = stream_histogram(stream, state, ckpt, ["event_type"], BUCKET_EXPR)
-        q.awaitTermination(120)
+        await_stream(q, 120)
 
     run()
     direct = histogram_of(events, ["event_type"], BUCKET_EXPR)
@@ -304,7 +304,7 @@ def test_stream_cms_supports_join_size_estimate(spark, tmp_path):
         .parquet(src)
     )
     q = stream_cms(stream, state, str(tmp_path / "ckpt"), "user_id", JOINSIZE_W)
-    q.awaitTermination(120)
+    await_stream(q, 120)
     streamed = current_cms(state)
     assert streamed.count() <= sketch.CMS_D * JOINSIZE_W  # bounded state
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select("o_custkey")
@@ -320,10 +320,13 @@ def test_stream_cms_supports_join_size_estimate(spark, tmp_path):
     batch_est = x103_join_size_estimate(spark, SF_DIR).first()["est_join_size"]
     assert est == batch_est
     # guard: same-run re-application of an applied batch_id is a no-op
+    # (the stream's run id is its checkpoint's generation id)
+    from dwh_etl_framework_spark.streaming.guard import _generation_id
+
     before = {(r["r"], r["col"]): r["cnt"] for r in current_cms(state).collect()}
     assert not fold_cms_batch(
         state, events, 0, "user_id", JOINSIZE_W,
-        run_id=str(tmp_path / "ckpt"),
+        run_id=_generation_id(spark, str(tmp_path / "ckpt")),
     )
     after = {(r["r"], r["col"]): r["cnt"] for r in current_cms(state).collect()}
     assert after == before

@@ -31,7 +31,7 @@ from dwh_etl_framework_spark.streaming.entity_folds import (
 )
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
 
-from conftest import SF_DIR
+from conftest import SF_DIR, await_stream
 
 PART_SCHEMA = "p_partkey long, p_name string, p_retailprice double"
 
@@ -87,7 +87,7 @@ def test_stream_entities_equal_batch_x101(spark, tmp_path):
         stream, stats, edges, str(tmp_path / "ckpt"),
         "p_name", "p_partkey", "p_retailprice",
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
     live = current_entities(stats, edges)
     assert _report_dict(live) == _batch_entity_grain(spark)
     # bounded state: stats = distinct values, never rows

@@ -28,7 +28,7 @@ from dwh_etl_framework_spark.streaming.ingest_dedup import (
 )
 from dwh_etl_framework_spark.streaming.merge import StreamMasterState
 
-from conftest import SF_DIR
+from conftest import SF_DIR, await_stream
 
 
 def _slices(spark):
@@ -95,7 +95,7 @@ def test_stream_ingest_equals_sequential_fold(spark, tmp_path):
     q = stream_ingest_dedup(
         stream, state, str(tmp_path / "ckpt"), cfg
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = _ids(state.read())
 
     assert got == expected
@@ -118,5 +118,5 @@ def test_stream_ingest_equals_sequential_fold(spark, tmp_path):
         str(tmp_path / "ckpt2"),
         cfg,
     )
-    q2.awaitTermination(120)
+    await_stream(q2, 120)
     assert _ids(state.read()) == got

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from dwh_etl_framework_spark.streaming.join import interval_join
 from dwh_etl_framework_spark.streaming.windows import events_file_stream
 
-from conftest import load_events
+from conftest import await_stream, load_events
 
 COLS = ["user_id", "l_event_id", "r_event_id", "l_ts", "r_ts"]
 
@@ -49,7 +49,7 @@ def _run(spark, stream_df, ckpt_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
     return spark.sql(f"SELECT * FROM {name}")
 
 

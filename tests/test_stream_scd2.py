@@ -29,6 +29,8 @@ from dwh_etl_framework_spark.streaming.scd2 import (
     stream_scd2,
 )
 
+from conftest import await_stream
+
 SPEC = JournalSpec(primary_key=("account_id",))
 T0 = datetime(2024, 1, 1)
 SCHEMA = (
@@ -91,7 +93,7 @@ def _run_stream(spark, src, state, ckpt):
         .parquet(src)
     )
     q = stream_scd2(stream, SPEC, state, ckpt)
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return state
 
 
@@ -236,7 +238,7 @@ def test_stamped_path_redelivery_is_idempotent(spark, tmp_path):
         .option("recursiveFileLookup", True)
         .parquet(src)
     )
-    stream_scd2(stream, SPEC, state, ckpt).awaitTermination(120)
+    await_stream(stream_scd2(stream, SPEC, state, ckpt), 120)
     before = _interval_set(current_scd2(state))
     got = current_scd2(state)
     assert got.count() == len(rows)
@@ -246,7 +248,7 @@ def test_stamped_path_redelivery_is_idempotent(spark, tmp_path):
     # inside the checkpoint dir), same batch ids, same content — the
     # anchor comes back identical from the meta sidecar, so the fold
     # absorbs every replayed batch
-    from dwh_etl_framework_spark.streaming.scd2 import _generation_id
+    from dwh_etl_framework_spark.streaming.guard import _generation_id
 
     gen = _generation_id(spark, ckpt)
     meta = StreamMasterState(spark, f"{state.path}__stampmeta")
@@ -508,7 +510,7 @@ def test_wiped_and_reused_checkpoint_mints_fresh_generation(spark, tmp_path):
     INSIDE the checkpoint dir, so it shares the wipe."""
     import shutil
 
-    from dwh_etl_framework_spark.streaming.scd2 import _generation_id
+    from dwh_etl_framework_spark.streaming.guard import _generation_id
 
     raw_schema = "account_id long, balance double"
     src = str(tmp_path / "src")
@@ -534,7 +536,7 @@ def test_wiped_and_reused_checkpoint_mints_fresh_generation(spark, tmp_path):
             .parquet(src)
         )
         state = StreamMasterState(spark, str(tmp_path / "scd2"))
-        stream_scd2(stream, SPEC, state, ckpt).awaitTermination(120)
+        await_stream(stream_scd2(stream, SPEC, state, ckpt), 120)
         return state
 
     # generation A: key 1 sees four versions across four batches
@@ -571,7 +573,7 @@ def test_wiped_and_reused_checkpoint_mints_fresh_generation(spark, tmp_path):
 def test_generation_id_stable_within_a_checkpoint_lifetime(spark, tmp_path):
     import shutil
 
-    from dwh_etl_framework_spark.streaming.scd2 import _generation_id
+    from dwh_etl_framework_spark.streaming.guard import _generation_id
 
     ckpt = str(tmp_path / "ck")
     os.makedirs(ckpt)

@@ -29,7 +29,7 @@ from dwh_etl_framework_spark.streaming.windows import (
     session_window_agg,
 )
 
-from conftest import SF_DIR, load_events
+from conftest import SF_DIR, await_stream, load_events
 
 COLS = ["user_id", "session_start", "session_end", "n_events", "sum_value"]
 
@@ -72,7 +72,7 @@ def test_stream_sessionize_equals_batch_session_window(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
     got = _rows(spark.sql("SELECT * FROM sess_replay"))
 
     want = _rows(session_window_agg(events_batch))
@@ -98,7 +98,7 @@ def test_stream_sessions_conserve_x47_event_partition(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    await_stream(q, 180)
     stream_totals = {
         r["user_id"]: (r["total"], r["sessions"])
         for r in spark.sql(

@@ -22,7 +22,7 @@ from dwh_etl_framework_spark.streaming.windows import (
     tumbling_window_agg,
 )
 
-from conftest import load_events
+from conftest import await_stream, load_events
 
 
 @pytest.fixture(scope="module")
@@ -48,7 +48,7 @@ def _run_stream(spark, stream_df, tmp_path, mode="append"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -113,7 +113,7 @@ def test_watermark_drops_late_events(spark, tmp_path):
             .writeStream.outputMode("update").foreachBatch(capture)
             .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
         )
-        q.awaitTermination(120)
+        await_stream(q, 120)
         return set(seen)
 
     assert run() == {10, 12}
@@ -171,7 +171,7 @@ def test_stream_merge_to_master_matches_batch_merge(spark, tmp_path):
     q = stream_merge_to_master(
         stream, spec, state, checkpoint_dir=str(tmp_path / "ckpt")
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
 
     got = {r.account_id: r.balance for r in state.read().select("account_id", "balance").collect()}
     # expected: per account, the row from the latest-processed batch wins by
@@ -230,7 +230,7 @@ def test_rocksdb_state_store_twin_equals_default(spark, tmp_path):
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
+            await_stream(q, 120)
             results[label] = sorted(
                 (r["k"], r["n"], r["s"]) for b in out for r in b
             )
