@@ -301,8 +301,8 @@ def x50_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5-threshold split, stable under growth like x30) is treated as the
     incoming batch and screened against the ~80% existing corpus — exact
     tier by text digest anti-probe, near tier by portable-minhash LSH
-    restricted to corpus×batch candidates
-    (operators/dedup.lsh_candidate_pairs_cross). This is the per-increment
+    restricted to corpus×batch candidates (operators/dedup.screen_increment,
+    with the portable signature flavour). This is the per-increment
     shape of a crawl pipeline: cost is index-probe per batch, and
     batch×batch or corpus×corpus pairs are never generated.
 
@@ -314,67 +314,7 @@ def x50_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pfx = F.substring(
         F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 2
     )
-    docs = t.documents.withColumn("__p", pfx)
-    corpus = docs.filter(F.col("__p") < "cc").select("doc_id", "text")
-    batch = docs.filter(F.col("__p") >= "cc").select("doc_id", "text")
-
-    # exact tier from ONE shared fingerprint table (round 16, VERDICT r15
-    # #7): the corpus-side distinct and the batch-side probe each used to
-    # evaluate md5(text) over their own text scan — two corpus passes in
-    # the TIMED plan. One (doc_id, split-prefix, digest) projection,
-    # lazily checkpointed (so it materializes inside the timed write like
-    # the x02b cands cut — no work moves across the timer), feeds both
-    # sides; text is scanned once and only 16-byte digests travel (the
-    # x01 digest rule). Measured at sf0.1: total 3.85 → 3.51 s, new wins
-    # 4/4 interleaved reps, rows identical (1,030). At 100 TB this is one
-    # fewer full-corpus read per increment.
-    fp_all = docs.select(
-        "doc_id", "__p", F.md5("text").alias("__h")
-    ).localCheckpoint(eager=False)
-    exact_ids = (
-        fp_all.filter(F.col("__p") >= "cc")
-        .join(
-            fp_all.filter(F.col("__p") < "cc").select("__h").distinct(),
-            "__h",
-            "left_semi",
-        )
-        .select("doc_id")
-    )
-    # ONE signature pass over the whole corpus, split afterwards (round
-    # 15): signatures are a pure per-doc function, so computing them on
-    # the pre-split table and filtering by the same md5-prefix predicate
-    # yields bit-identical sig_c/sig_b while the shingle explode + 64
-    # md5-minima pipeline — the dominant cost — runs once instead of
-    # once per side. Checkpoint BEFORE the split: the two filters would
-    # otherwise each re-execute the shared plan (the x87 fan-out rule).
-    sig_all = dedup.minhash_signatures_portable(
-        docs.select("doc_id", "text"), "text", "doc_id", n=3, k=64
-    ).localCheckpoint(eager=True)
-    sig_pfx = F.substring(
-        F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 2
-    )
-    sig_c = sig_all.filter(sig_pfx < "cc")
-    sig_b = sig_all.filter(sig_pfx >= "cc")
-    near_ids = (
-        dedup.lsh_candidate_pairs_cross(
-            sig_c, sig_b, "doc_id", bands=16, rows_per_band=4,
-            est_threshold=0.5,
-            # sig_c/sig_b are narrow filters of the checkpointed sig_all:
-            # skip the operator's own per-side re-checkpoints (round 15)
-            inputs_materialized=True,
-        )
-        .select(F.col("doc_batch").alias("doc_id"))
-        .distinct()
-    )
-    ex = exact_ids.withColumn("__ex", F.lit(True))
-    nr = near_ids.withColumn("__nr", F.lit(True))
-    return (
-        batch.join(ex, "doc_id", "left")
-        .join(nr, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("__ex"), F.lit(False)).alias("dup_exact"),
-            F.coalesce(F.col("__nr"), F.lit(False)).alias("dup_near"),
-            (F.col("__ex").isNull() & F.col("__nr").isNull()).alias("kept"),
-        )
-    )
+    return dedup.screen_increment(
+        t.documents.select("doc_id", "text"), pfx >= "cc", "text", "doc_id",
+        signatures=dedup.minhash_signatures_portable,
+    ).select("doc_id", "dup_exact", "dup_near", "kept")

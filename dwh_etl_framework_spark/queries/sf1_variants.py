@@ -32,6 +32,10 @@ from pyspark.sql import functions as F
 
 from dwh_etl_framework_spark.operators import dedup, similarity
 from dwh_etl_framework_spark.queries.registry import fixtures, query
+from dwh_etl_framework_spark.queries.wave6 import (
+    _split_leakage,
+    _text_vector_consistency,
+)
 
 #: deterministic quarter of the shingle universe (both engines md5 the
 #: same shingle text, so the sample sets are identical by construction).
@@ -463,63 +467,20 @@ def x32s_knn_join_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x50s_incremental_dedup16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1 incremental-ingest dedup at k=16 (4x4 bands) — the exact x50
 
-    composition (digest anti-probe + ``lsh_candidate_pairs_cross``) with
+    composition (``dedup.screen_increment``, portable signatures) with
     the 64-perm expansion shrunk 4x so the cross-LSH oracle holds at
     sf1."""
     t = fixtures(spark, sf_dir)
     pfx = F.substring(
         F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 2
     )
-    docs = t.documents.withColumn("__p", pfx)
-    corpus = docs.filter(F.col("__p") < "cc").select("doc_id", "text")
-    batch = docs.filter(F.col("__p") >= "cc").select("doc_id", "text")
-    # one shared fingerprint table feeds both exact-tier sides (the x50
-    # round-16 reshape: one text scan instead of two, digests travel)
-    fp_all = docs.select(
-        "doc_id", "__p", F.md5("text").alias("__h")
-    ).localCheckpoint(eager=False)
-    exact_ids = (
-        fp_all.filter(F.col("__p") >= "cc")
-        .join(
-            fp_all.filter(F.col("__p") < "cc").select("__h").distinct(),
-            "__h",
-            "left_semi",
-        )
-        .select("doc_id")
-    )
-    # one signature pass + split (round 15 — the x50 reshape: signatures
-    # are per-doc pure, so computing once and filtering by the same
-    # md5-prefix predicate is bit-identical; checkpoint before the split
-    # so the two filters share one execution)
-    sig_all = dedup.minhash_signatures_portable(
-        docs.select("doc_id", "text"), "text", "doc_id", n=3, k=K16
-    ).localCheckpoint(eager=True)
-    sig_c = sig_all.filter(pfx < "cc")
-    sig_b = sig_all.filter(pfx >= "cc")
-    near_ids = (
-        dedup.lsh_candidate_pairs_cross(
-            sig_c, sig_b, "doc_id", bands=BANDS4, rows_per_band=ROWS4,
-            est_threshold=0.5,
-            # uncapped: oracle twin rule (see x03s) — no cap in the oracle
-            max_bucket_size=None,
-            # both sides filter the checkpointed sig_all (see x50)
-            inputs_materialized=True,
-        )
-        .select(F.col("doc_batch").alias("doc_id"))
-        .distinct()
-    )
-    ex = exact_ids.withColumn("__ex", F.lit(True))
-    nr = near_ids.withColumn("__nr", F.lit(True))
-    return (
-        batch.join(ex, "doc_id", "left")
-        .join(nr, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("__ex"), F.lit(False)).alias("dup_exact"),
-            F.coalesce(F.col("__nr"), F.lit(False)).alias("dup_near"),
-            (F.col("__ex").isNull() & F.col("__nr").isNull()).alias("kept"),
-        )
-    )
+    return dedup.screen_increment(
+        t.documents.select("doc_id", "text"), pfx >= "cc", "text", "doc_id",
+        n=3, k=K16, bands=BANDS4, rows_per_band=ROWS4, est_threshold=0.5,
+        # uncapped: oracle twin rule (see x03s) — no cap in the oracle
+        max_bucket_size=None,
+        signatures=dedup.minhash_signatures_portable,
+    ).select("doc_id", "dup_exact", "dup_near", "kept")
 
 
 @query(
@@ -573,59 +534,10 @@ def x50s_incremental_dedup16(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x66s_split_leakage_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1/X3 contamination check over the sampled-shingle pair tier —
 
-    x66's exact composition (pairs ⋈ md5 split assignment) with the
-    x02s sampled verify tier as the pair source, so the oracle holds at
-    sf1."""
-    t = fixtures(spark, sf_dir)
-    pairs = dedup.ngram_jaccard_pairs(
-        t.documents, "text", "doc_id", n=3, threshold=0.5,
-        shingle_filter=_shingle_col_pred(),
-    ).select("doc_a", "doc_b")
-    h2 = F.substring(
-        F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 2
-    )
-    assigned = t.documents.select(
-        "doc_id",
-        F.when(h2 < "e6", "train")
-        .when(h2 < "f3", "val")
-        .otherwise("test")
-        .alias("split"),
-    )
-    leaks = (
-        pairs.join(
-            assigned.select(
-                F.col("doc_id").alias("doc_a"), F.col("split").alias("sa")
-            ),
-            "doc_a",
-        )
-        .join(
-            assigned.select(
-                F.col("doc_id").alias("doc_b"), F.col("split").alias("sb")
-            ),
-            "doc_b",
-        )
-        .filter(F.col("sa") != F.col("sb"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.least("sa", "sb").alias("split_lo"),
-            F.greatest("sa", "sb").alias("split_hi"),
-        )
-        # pair-sized table, three consumers (x65 lineage-cut rule)
-        .localCheckpoint(eager=False)
-    )
-    n_pairs = leaks.groupBy("split_lo", "split_hi").agg(
-        F.count(F.lit(1)).alias("n_pairs")
-    )
-    docs = (
-        leaks.select("split_lo", "split_hi", F.col("doc_a").alias("d"))
-        .unionByName(
-            leaks.select("split_lo", "split_hi", F.col("doc_b").alias("d"))
-        )
-        .groupBy("split_lo", "split_hi")
-        .agg(F.countDistinct("d").alias("n_docs"))
-    )
-    return n_pairs.join(docs, ["split_lo", "split_hi"])
+    x66's builder (``wave6._split_leakage``: pairs ⋈ md5 split
+    assignment) with the x02s sampled verify tier as the pair source, so
+    the oracle holds at sf1."""
+    return _split_leakage(spark, sf_dir, shingle_filter=_shingle_col_pred())
 
 
 @query(
@@ -701,47 +613,10 @@ def x68s_text_vector_consistency_sampled(
 ) -> DataFrame:
     """X2/X1 cross-modal QA with the sampled-shingle near-dup tier —
 
-    x68's exact composition (pair classes ⋈ fixed-point cosine stats)
+    x68's builder (``wave6._text_vector_consistency``: pair classes ⋈
+    fixed-point cosine stats)
     with x02s as the text-pair source, so the only sf1-infeasible CTE
     (the shingle self-join) shrinks ~16x."""
-    t = fixtures(spark, sf_dir)
-    dup = dedup.ngram_jaccard_pairs(
-        t.documents, "text", "doc_id", n=3, threshold=0.5,
-        shingle_filter=_shingle_col_pred(),
-    ).select("doc_a", "doc_b", F.lit("near_dup").alias("pair_class"))
-    ids = t.embeddings.select("vec_id")
-    ctrl = (
-        t.embeddings.filter(F.col("vec_id") % 2 == 0)
-        .select(
-            F.col("vec_id").alias("doc_a"),
-            (F.col("vec_id") + 1).alias("doc_b"),
-        )
-        .join(ids.select(F.col("vec_id").alias("doc_b")), "doc_b", "left_semi")
-        .select("doc_a", "doc_b", F.lit("adjacent_control").alias("pair_class"))
-    )
-    pairs = dup.unionByName(ctrl)
-    ea = t.embeddings.select(
-        F.col("vec_id").alias("doc_a"), F.col("embedding").alias("__va")
-    )
-    eb = t.embeddings.select(
-        F.col("vec_id").alias("doc_b"), F.col("embedding").alias("__vb")
-    )
-    scored = (
-        pairs.join(ea, "doc_a")
-        .join(eb, "doc_b")
-        .withColumn(
-            "cos_micro",
-            F.floor(
-                similarity.cosine(F.col("__va"), F.col("__vb"), exact=True)
-                * 1_000_000
-            ).cast("bigint"),
-        )
-    )
-    return scored.groupBy("pair_class").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.expr("CAST(sum(cos_micro) div count(1) AS BIGINT)").alias(
-            "mean_cos_micro"
-        ),
-        F.min("cos_micro").alias("min_cos_micro"),
-        F.max("cos_micro").alias("max_cos_micro"),
+    return _text_vector_consistency(
+        spark, sf_dir, shingle_filter=_shingle_col_pred()
     )

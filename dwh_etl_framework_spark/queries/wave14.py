@@ -21,7 +21,7 @@ ANSI SQL, so the driver hash-checks discovery AND proof in one row set
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dwh_etl_framework_spark.operators import dedup, sampling, setjoin
@@ -105,6 +105,19 @@ def x97_cascade_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full corpus. ``max_bucket_size=None``: a degenerate-bucket cap
     activating here would silently change the audit, so it fails loudly
     instead (the r7 sf1-variant convention)."""
+    return _recall_audit(spark, sf_dir)
+
+
+def _recall_audit(
+    spark: SparkSession,
+    sf_dir: str,
+    shingle_filter: Column | None = None,
+    k: int = 64,
+    bands: int = 16,
+    rows_per_band: int = 4,
+) -> DataFrame:
+    """x97/x97s body; ``shingle_filter`` samples both tiers' shingle
+    universe, ``k``/``bands``/``rows_per_band`` set the LSH geometry."""
     t = fixtures(spark, sf_dir)
     docs = t.documents
     # Each tier derives its own shingles from the (cached) corpus scan.
@@ -124,16 +137,17 @@ def x97_cascade_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # WHEN the same jobs run moves.
     def _exact_tier() -> DataFrame:
         return setjoin.prefix_filter_jaccard_pairs(
-            docs, "text", "doc_id", n=3, threshold=0.5
+            docs, "text", "doc_id", n=3, threshold=0.5,
+            shingle_filter=shingle_filter,
         )
 
     def _lsh_tier() -> DataFrame:
         sigs = dedup.minhash_signatures_portable(
-            docs, "text", "doc_id", n=3, k=64
+            docs, "text", "doc_id", n=3, k=k, shingle_filter=shingle_filter
         )
         return dedup.lsh_candidate_pairs(
-            sigs, "doc_id", bands=16, rows_per_band=4, est_threshold=0.5,
-            max_bucket_size=None,
+            sigs, "doc_id", bands=bands, rows_per_band=rows_per_band,
+            est_threshold=0.5, max_bucket_size=None,
         ).select("doc_a", "doc_b", F.lit(True).alias("__hit"))
 
     exact, recalled = run_concurrently(spark, _exact_tier, _lsh_tier)
@@ -204,38 +218,14 @@ _CASCADE_AUDIT_SAMPLED_SQL = f"""
 def x97s_cascade_audit_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1 composed recall audit over the md5-quarter shingle sample at
 
-    k=16 — the x97 pipeline with both tiers on the sampled universe
+    k=16 — x97's builder with both tiers on the sampled universe
     (``shingle_filter`` threaded through ``prefix_filter_jaccard_pairs``
     AND ``minhash_signatures_portable``), so the naive+banding oracle
     holds at sf1 and the COMPOSITION carries scale value evidence, not
     just its two halves separately."""
-    t = fixtures(spark, sf_dir)
-    docs = t.documents
-    # same two-thread tier construction as x97 (independent tiers; only
-    # job SCHEDULING overlaps, plans unchanged)
-    def _exact_tier() -> DataFrame:
-        return setjoin.prefix_filter_jaccard_pairs(
-            docs, "text", "doc_id", n=3, threshold=0.5,
-            shingle_filter=_shingle_col_pred(),
-        )
-
-    def _lsh_tier() -> DataFrame:
-        sigs = dedup.minhash_signatures_portable(
-            docs, "text", "doc_id", n=3, k=K16,
-            shingle_filter=_shingle_col_pred(),
-        )
-        return dedup.lsh_candidate_pairs(
-            sigs, "doc_id", bands=BANDS4, rows_per_band=ROWS4,
-            est_threshold=0.5, max_bucket_size=None,
-        ).select("doc_a", "doc_b", F.lit(True).alias("__hit"))
-
-    exact, recalled = run_concurrently(spark, _exact_tier, _lsh_tier)
-    return (
-        exact.join(recalled, ["doc_a", "doc_b"], "left")
-        .select(
-            "doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard",
-            F.coalesce(F.col("__hit"), F.lit(False)).alias("lsh_recalled"),
-        )
+    return _recall_audit(
+        spark, sf_dir, shingle_filter=_shingle_col_pred(), k=K16,
+        bands=BANDS4, rows_per_band=ROWS4,
     )
 
 

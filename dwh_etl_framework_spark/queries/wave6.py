@@ -30,10 +30,10 @@ statistics, event-rate profiling, and two surface-coverage rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dwh_etl_framework_spark.operators import similarity
+from dwh_etl_framework_spark.operators import dedup, similarity
 from dwh_etl_framework_spark.queries.registry import fixtures, query
 
 #: x61: node-sample bound and k (mirrors x57's graph geometry so the two
@@ -714,11 +714,18 @@ def x66_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates only; the split assignment is a map-only md5 over doc_id
     joined onto pair endpoints (two digest-keyed hash joins of a
     pair-sized table). The leak aggregate is |splits|²-sized."""
-    from dwh_etl_framework_spark.operators import dedup
+    return _split_leakage(spark, sf_dir)
 
+
+def _split_leakage(
+    spark: SparkSession, sf_dir: str, shingle_filter: Column | None = None
+) -> DataFrame:
+    """x66/x66s body; ``shingle_filter`` samples the pair tier's shingle
+    universe (``dedup.ngram_jaccard_pairs``)."""
     t = fixtures(spark, sf_dir)
     pairs = dedup.ngram_jaccard_pairs(
-        t.documents, "text", "doc_id", n=3, threshold=0.5
+        t.documents, "text", "doc_id", n=3, threshold=0.5,
+        shingle_filter=shingle_filter,
     ).select("doc_a", "doc_b")
     h2 = F.substring(
         F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 2
@@ -943,7 +950,6 @@ def containment_capped(
     Observation`` — dropped_buckets/dropped_rows/largest_bucket resolve
     after the first action, per the bucket_cap contract. The registry
     query uses the defaults."""
-    from dwh_etl_framework_spark.operators import dedup
     from dwh_etl_framework_spark.operators.bucket_cap import cap_bucket_size
     from dwh_etl_framework_spark.queries.round6_ops import (
         CONTAIN_MIN_PPM,
@@ -1080,11 +1086,18 @@ def x68_text_vector_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector store, dot products JVM-side via the shared fixed-point
     ``similarity.cosine(exact=True)`` expression. The stats aggregate is
     2 rows."""
-    from dwh_etl_framework_spark.operators import dedup, similarity
+    return _text_vector_consistency(spark, sf_dir)
 
+
+def _text_vector_consistency(
+    spark: SparkSession, sf_dir: str, shingle_filter: Column | None = None
+) -> DataFrame:
+    """x68/x68s body; ``shingle_filter`` samples the near-dup tier's
+    shingle universe (``dedup.ngram_jaccard_pairs``)."""
     t = fixtures(spark, sf_dir)
     dup = dedup.ngram_jaccard_pairs(
-        t.documents, "text", "doc_id", n=3, threshold=0.5
+        t.documents, "text", "doc_id", n=3, threshold=0.5,
+        shingle_filter=shingle_filter,
     ).select("doc_a", "doc_b", F.lit("near_dup").alias("pair_class"))
     ids = t.embeddings.select("vec_id")
     ctrl = (

@@ -1,29 +1,26 @@
 """X1 as a continuous stream: deduplicating corpus ingest (foreachBatch).
 
-The batch shape is x50_incremental_dedup (``queries/dedup_ops.py:298``):
-each increment is screened against the existing corpus — exact tier by
-text digest, near tier by MinHash-LSH restricted to corpus×batch
-candidates (``operators/dedup.lsh_candidate_pairs_cross``) — and only
-survivors are appended. This module runs that same screen inside
-``foreachBatch``, so a document stream (a crawl feed) lands continuously
-into an always-deduplicated corpus; the reference has no streaming tier
-at all (its delta mode is declared and unimplemented,
-``airflow_etl.py:452-463``), so this is the R33×X1 composition a training
--data pipeline actually needs.
+Each micro-batch is screened against the corpus stored so far with
+``operators/dedup.screen_increment`` — x50_incremental_dedup's
+composition (exact tier by text digest, near tier by MinHash-LSH over
+corpus×batch candidates only) with x03's xxhash64 signature flavour —
+and only survivors are appended, so a document stream (a crawl feed)
+lands continuously into an always-deduplicated corpus. The reference has
+no streaming tier at all (its delta mode is declared and unimplemented,
+``airflow_etl.py:452-463``).
 
-Scope, per x50's contract: batch-INTERNAL exact duplicates collapse to
-the min-id survivor inside the batch; batch-internal NEAR duplicates are
-out of scope here (they are a separate, much smaller self-join job —
-``lsh_jaccard_cascade`` over the post-ingest corpus periodically), and
-corpus×corpus pairs never re-form because the corpus only ever grows by
-screened survivors.
+Scope: batch-INTERNAL exact duplicates collapse to the min-id survivor
+inside the batch; batch-internal NEAR duplicates are out of scope here
+(a separate, much smaller self-join job — ``lsh_jaccard_cascade`` over
+the post-ingest corpus periodically), and corpus×corpus pairs never
+re-form because the corpus only ever grows by screened survivors.
 
-Scale shape: per micro-batch cost is index-probe, not corpus-rescan — the
-exact tier probes a digest column, the near tier probes the corpus band
-table (at production scale the band table is a persistent table
-partitioned by (band_idx, band_hash); here it is derived per batch from
-the parquet corpus, which the tests keep fixture-sized). Both band sides
-stay bucket-capped through ``lsh_candidate_pairs_cross``.
+Cost: every micro-batch re-reads the whole stored corpus and re-signs it
+together with the batch (one text scan, one signature pass). A
+persistent corpus band index partitioned by (band_idx, band_hash), which
+would make the per-batch cost an index probe, is future work. Both band
+sides stay bucket-capped at 5000 (the ``lsh_candidate_pairs_cross``
+default).
 
 Corpus durability follows ``streaming/merge.StreamMasterState``: state is
 the parquet path on disk, so a restarted stream resumes from the stored
@@ -42,7 +39,10 @@ from dwh_etl_framework_spark.streaming.merge import StreamMasterState
 
 
 class DedupIngestConfig:
-    """Knobs for the ingest screen — defaults mirror x50/x03 exactly."""
+    """Knobs for the ingest screen: shingle size ``n``, signature width
+    ``k`` and the LSH geometry. The defaults are x50's (3-grams, k=64,
+    16×4 bands, estimated Jaccard ≥ 0.5); signatures are x03's xxhash64
+    flavour."""
 
     def __init__(
         self,
@@ -66,7 +66,7 @@ class DedupIngestConfig:
 def screen_batch(
     corpus: DataFrame | None, batch: DataFrame, cfg: DedupIngestConfig
 ) -> DataFrame:
-    """Return the batch rows that survive the x50 screen vs ``corpus``.
+    """Return the batch rows that survive the screen vs ``corpus``.
 
     Pure function over DataFrames (no I/O) so the batch path and the
     foreachBatch path share one implementation — the twin-testing rule
@@ -81,25 +81,14 @@ def screen_batch(
     )
     if corpus is None:
         return batch
-    # exact tier vs corpus: digest anti-probe (text never shuffles)
-    corpus_digests = corpus.select(F.md5(F.col(txt)).alias("__digest"))
-    batch = batch.withColumn("__digest", F.md5(F.col(txt))).join(
-        corpus_digests, "__digest", "left_anti"
-    ).drop("__digest")
-    # near tier: corpus×batch LSH candidates only
-    corpus_sigs = dedup.minhash_signatures(
-        corpus, txt, id_c, n=cfg.n, k=cfg.k
+    docs = corpus.select(id_c, txt).withColumn("__side", F.lit(False)).unionByName(
+        batch.withColumn("__side", F.lit(True)), allowMissingColumns=True
     )
-    batch_sigs = dedup.minhash_signatures(batch, txt, id_c, n=cfg.n, k=cfg.k)
-    near = dedup.lsh_candidate_pairs_cross(
-        corpus_sigs,
-        batch_sigs,
-        id_c,
-        bands=cfg.bands,
-        rows_per_band=cfg.rows_per_band,
-        est_threshold=cfg.est_threshold,
-    ).select(F.col("doc_batch").alias(id_c)).distinct()
-    return batch.join(near, id_c, "left_anti")
+    screened = dedup.screen_increment(
+        docs, F.col("__side"), txt, id_c, n=cfg.n, k=cfg.k, bands=cfg.bands,
+        rows_per_band=cfg.rows_per_band, est_threshold=cfg.est_threshold,
+    )
+    return screened.filter("kept").select(*batch.columns)
 
 
 def fold_ingest_batch(

@@ -80,17 +80,16 @@ def fold_scd2_batch(
     PKs are filtered OUT of every incoming batch first — so an
     at-least-once re-delivery of a pre-erasure batch cannot resurrect
     an erased key."""
-    if not batch_df.head(1):
-        return False
     pk = list(spec.primary_key)
     dedup_cols = pk + list(ORDER_COLS)
+    erased = tombstones.read() if tombstones is not None else None
+    if erased is not None:
+        # one empty check, after the filter: an empty batch and a fully
+        # erased one both return False
+        batch_df = batch_df.join(F.broadcast(erased), on=pk, how="left_anti")
+    if not batch_df.head(1):
+        return False
     batch = _normalize_batch(batch_df).dropDuplicates(dedup_cols)
-    if tombstones is not None:
-        erased = tombstones.read()
-        if erased is not None:
-            batch = batch.join(F.broadcast(erased), on=pk, how="left_anti")
-            if not batch.head(1):
-                return False
     stored = state.read()
     if stored is None:
         state.write(

@@ -583,3 +583,27 @@ def test_generation_id_stable_within_a_checkpoint_lifetime(spark, tmp_path):
     shutil.rmtree(ckpt)
     os.makedirs(ckpt)
     assert _generation_id(spark, ckpt) != g1
+
+
+def test_tombstoned_fold_runs_one_empty_check(spark, tmp_path, monkeypatch):
+    """With tombstones holding keys, a fold checks emptiness once, after
+    the erased-key filter; an erased-only batch still returns False."""
+    rows = _journal_rows(seed=37, n_keys=4)
+    state = StreamMasterState(spark, str(tmp_path / "scd2"))
+    tomb = StreamMasterState(spark, str(tmp_path / "tomb"))
+    tomb.write(spark.createDataFrame([(1,)], "account_id long"))
+    batch = spark.createDataFrame(rows, SCHEMA)
+    calls = []
+    real_head = type(batch).head
+
+    def counting_head(self, n=None):
+        calls.append(n)
+        return real_head(self, n)
+
+    monkeypatch.setattr(type(batch), "head", counting_head)
+    assert fold_scd2_batch(state, batch, SPEC, tombstones=tomb) is True
+    assert len(calls) == 1
+    erased_only = spark.createDataFrame([r for r in rows if r[0] == 1], SCHEMA)
+    assert fold_scd2_batch(state, erased_only, SPEC, tombstones=tomb) is False
+    assert len(calls) == 2
+    assert 1 not in {r["account_id"] for r in current_scd2(state).collect()}
